@@ -995,6 +995,25 @@ def test_pq_incomplete_codebook_raises(spark):
         pq_topk(emb, emb.limit(1), dim=8, m=4, n_codes=4)
 
 
+def test_codebook_validated_for_other_m_raises(spark):
+    """A codebook checked for m=4 has sub_id groups 0..3 only: a scorer
+    with m=8 must re-validate it and raise, not score 4 of 8 subspaces."""
+    import pytest as _pytest
+
+    from weather_bigquery_lakehouse_spark.operators import similarity as sim
+
+    emb = spark.createDataFrame(
+        [(i, [float(i + j) for j in range(8)]) for i in range(6)],
+        "vec_id long, embedding array<double>",
+    )
+    cb4 = sim.validate_codebook(
+        sim.pq_codebook_standin(emb, dim=8, m=4, n_codes=4), m=4
+    )
+    assert sim.pq_topk(emb, emb.limit(1), dim=8, m=4, n_codes=4, codebook=cb4).count()
+    with _pytest.raises(ValueError, match=r"codebook incomplete: sub_id group\(s\) \[4, 5, 6, 7\]"):
+        sim.pq_topk(emb, emb.limit(1), dim=8, m=8, n_codes=4, codebook=cb4)
+
+
 def test_contrastive_pairs_hardest_positive_and_negative(spark):
     from weather_bigquery_lakehouse_spark.operators import similarity as sim
 

@@ -145,6 +145,102 @@ def test_second_day_preserves_first_days_partitions(spark, tmp_path):
         assert dates == {"2024-03-25", "2024-03-26"}, f"{tier}/{entity}: {dates}"
 
 
+DAYS = ("2024-03-25", "2024-03-26")
+SILVER_ENTITIES = ("cptec_weather", "ibge_cities", "cptec_cities")
+
+
+def _partition_files(zone, entity, date):
+    part = zone / "silver" / entity / f"_ingestion_date={date}"
+    return {f.name: f.stat().st_mtime_ns for f in part.iterdir()}
+
+
+@pytest.fixture(scope="module")
+def two_days(spark, tmp_path_factory):
+    """Day 1, day 2, then day 2 again (the DAG's retry), each day's
+    forecast horizon starting at its own date. Day 2's feed lacks CPTEC
+    id 4703, as when that city's fetch fails."""
+    from weather_bigquery_lakehouse_spark.io.catalog import GoldCatalog
+
+    base = tmp_path_factory.mktemp("two_days")
+    zone, wh = base / "zones", base / "warehouse"
+    cities = fixture_city_rows(10)
+    forecasts = {d: fixture_forecast_rows(10, ingestion_date=d) for d in DAYS}
+    forecasts[DAYS[1]] = [r for r in forecasts[DAYS[1]] if r["codigo"] != 4703]
+
+    def run(date):
+        run_pipeline(spark, str(zone), str(wh), cities, forecasts[date], date)
+        fact = GoldCatalog(str(wh)).read_table(spark, "fact_weather")
+        return sorted(map(tuple, fact.collect()))
+
+    run(DAYS[0])
+    day1_files = {e: _partition_files(zone, e, DAYS[0]) for e in SILVER_ENTITIES}
+    fact_day2 = run(DAYS[1])
+    fact_retry = run(DAYS[1])
+    return dict(
+        zone=zone, wh=str(wh), cities=cities, forecasts=forecasts,
+        day1_files=day1_files, fact_day2=fact_day2, fact_retry=fact_retry,
+    )
+
+
+def test_two_day_rerun_keeps_gold_keys_unique(spark, two_days):
+    """Day N must not see earlier days' silver rows: when it did, dim_city
+    held N² rows per city pair and the fact increment was appended once
+    per repeated dim_city row. After day 1, day 2 and a retried day 2,
+    every gold key is unique and every fact row joins exactly one row of
+    each dim, also day 1's rows for the city missing from day 2."""
+    from weather_bigquery_lakehouse_spark.io.catalog import GoldCatalog
+
+    cat = GoldCatalog(two_days["wh"])
+    dim_city = cat.read_table(spark, "dim_city")
+    assert dim_city.where("id_cptec = 4703").count() == 1
+    assert dim_city.groupBy("id_ibge", "id_cptec").count().where("count > 1").count() == 0
+    fact = cat.read_table(spark, "fact_weather")
+    dates = {str(r[0]) for r in fact.select("_ingestion_date").distinct().collect()}
+    assert dates == set(DAYS)
+    assert fact.groupBy("id_fact", "_ingestion_date").count().where("count > 1").count() == 0
+    for dim, key in [
+        ("dim_city", "id_city"),
+        ("dim_update_date", "id_update_date"),
+        ("dim_forecast_date", "id_forecast_date"),
+        ("dim_weather_condition", "id_weather_condition"),
+    ]:
+        per_key = cat.read_table(spark, dim).groupBy(key).count()
+        joined = fact.join(per_key, key, "left")
+        assert joined.where("count IS NULL OR count != 1").count() == 0, dim
+    assert two_days["fact_retry"] == two_days["fact_day2"]
+
+
+def test_day_two_silver_touches_only_its_partition(spark, two_days):
+    """Silver reads only the run date's bronze partition and overwrites
+    only that silver partition: day 2 (and its retry) leave day 1's silver
+    files as they were, and the day-2 `_quality` rows count day-2 input
+    only."""
+    zone = two_days["zone"]
+    for entity in SILVER_ENTITIES:
+        files = _partition_files(zone, entity, DAYS[0])
+        assert files == two_days["day1_files"][entity], entity
+    forecasts = two_days["forecasts"][DAYS[1]]
+    rows_in = {
+        "cptec_weather": sum(len(r["clima"]) for r in forecasts),
+        "ibge_cities": len(two_days["cities"]),
+        "cptec_cities": len(forecasts),
+    }
+    for entity, expected in rows_in.items():
+        q = spark.read.parquet(str(zone / "silver" / "_quality" / entity))
+        got = [r["rows_in"] for r in q.where(F.col("_processing_date") == DAYS[1]).collect()]
+        assert got == [expected, expected], entity
+
+
+def test_fixture_forecasts_start_at_ingestion_date():
+    rows = fixture_forecast_rows(3, days=6, ingestion_date="2024-03-31")
+    # one stamp per city, in the three formats (duplicate records repeat one)
+    stamps = {r["codigo"]: r["atualizado_em"] for r in rows}
+    assert [stamps[4700 + i] for i in range(3)] == ["2024-03-31", "31/03/2024", "03-31-2024"]
+    assert [d["data"] for d in rows[0]["clima"]] == [
+        "2024-03-31", "2024-04-01", "2024-04-02", "2024-04-03", "2024-04-04", "2024-04-05",
+    ]
+
+
 def test_source_drop_accounting():
     src = CitySource(fetch_fn=lambda url: (_ for _ in ()).throw(IOError("down")))
     rows = src.city_rows(["a", "b"])
@@ -354,6 +450,17 @@ def test_run_pipeline_rejects_unexecutable_dag(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="bronze"):
         run_pipeline(spark, dag=silver_only, **kwargs)
+
+
+def test_run_pipeline_rejects_maintenance_as_daily_task(spark, tmp_path):
+    """Maintenance has a stage for execute_stage, but run_pipeline runs
+    only daily stages: a dag marking it daily fails before any work."""
+    from weather_bigquery_lakehouse_spark.pipeline.runner import DagSpec, TaskSpec
+
+    dag = DagSpec("d", "@daily", False, 1, 5, (TaskSpec("zone_maintenance"),))
+    with pytest.raises(ValueError, match="zone_maintenance.*no executable daily stage"):
+        run_pipeline(spark, str(tmp_path / "z"), str(tmp_path / "w"), [], [], dag=dag)
+    assert not (tmp_path / "z").exists()
 
 
 def test_execute_stage_per_task_equals_in_process_pipeline(spark, tmp_path):

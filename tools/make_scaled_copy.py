@@ -17,9 +17,10 @@ nothing here feeds the correctness gate):
 - lineitem, orders: K verbatim copies (their entries aggregate/filter or
   join dimensions; duplicate keys only multiply join fan-out, which is
   exactly the work being measured).
-- embeddings: K copies with vec_id offset per copy, so the brute-force
-  cosine corpus grows K× while the probe set (vec_id < n_probes) stays
-  the original — probes × corpus work scales K×.
+- embeddings: K copies, copy i with vec_id shifted by i·(max(vec_id)+1)
+  so ids never collide; the brute-force cosine corpus grows K× while
+  the probe set (vec_id < n_probes) stays the original — probes × corpus
+  work scales K×.
 - customer, nation, region: copied as-is (dimensions).
 """
 
@@ -37,7 +38,6 @@ from weather_bigquery_lakehouse_spark.session import build_session
 _DUP = ["lineitem", "orders"]
 _ID_OFFSET = ["embeddings"]
 _COPY = ["customer", "nation", "region"]
-_OFFSET = 10_000_000
 
 
 def main() -> None:
@@ -52,9 +52,10 @@ def main() -> None:
             for _ in range(k - 1):
                 scaled = scaled.unionByName(df)
         elif name in _ID_OFFSET:
+            offset = df.agg(F.max("vec_id")).first()[0] + 1
             parts = [
                 df.withColumn(
-                    "vec_id", (F.col("vec_id") + F.lit(i * _OFFSET)).cast("bigint")
+                    "vec_id", (F.col("vec_id") + F.lit(i * offset)).cast("bigint")
                 )
                 for i in range(k)
             ]

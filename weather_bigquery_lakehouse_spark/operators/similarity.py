@@ -501,15 +501,17 @@ def _validated_codebook(codebook: DataFrame, m: int) -> DataFrame:
 
 
 #: Attribute set on a broadcast codebook frame whose completeness check
-#: already ran — `_as_codebook` passes such frames through so several
+#: already ran, holding the ``m`` it was checked for — `_as_codebook`
+#: passes such frames through to scorers with that same ``m`` so several
 #: scorers share ONE validation job instead of each re-running the same
 #: distinct-``sub_id`` probe (the report entry consumes one codebook from
-#: five scorers). Plain DataFrames are still validated per consumer.
+#: five scorers). Plain DataFrames, and frames checked for another ``m``,
+#: are validated per consumer.
 _PREVALIDATED_ATTR = "_wbl_codebook_prevalidated"
 
 
-def _mark_prevalidated(cb: DataFrame) -> DataFrame:
-    setattr(cb, _PREVALIDATED_ATTR, True)
+def _mark_prevalidated(cb: DataFrame, m: int) -> DataFrame:
+    setattr(cb, _PREVALIDATED_ATTR, m)
     return cb
 
 
@@ -529,7 +531,7 @@ def pq_codebook_standin(
     several scorers share one completeness-check job instead of each
     re-counting the same ≤ m·n_codes-row frame."""
     return _mark_prevalidated(
-        _pq_codebook(embeddings, m, _pq_sub(dim, m), n_codes, id_col, vec_col)
+        _pq_codebook(embeddings, m, _pq_sub(dim, m), n_codes, id_col, vec_col), m
     )
 
 
@@ -538,15 +540,16 @@ def validate_codebook(codebook: DataFrame, m: int) -> DataFrame:
     ONCE (one small job) and reuse the returned broadcast frame across
     every scorer that takes a ``codebook`` — instead of each consumer
     re-running the same distinct-``sub_id`` probe on the same frame."""
-    return _mark_prevalidated(_validated_codebook(codebook, m))
+    return _mark_prevalidated(_validated_codebook(codebook, m), m)
 
 
 def _as_codebook(codebook: DataFrame, m: int) -> DataFrame:
     """Normalize the ``codebook`` argument the PQ scorers accept: a frame
-    marked prevalidated (:func:`pq_codebook_standin` /
+    marked prevalidated for this ``m`` (:func:`pq_codebook_standin` /
     :func:`validate_codebook`) passes through; any other DataFrame is
-    validated here (one small job)."""
-    if getattr(codebook, _PREVALIDATED_ATTR, False):
+    validated here (one small job), so a codebook checked for a smaller
+    ``m`` raises instead of scoring over a subset of the subspaces."""
+    if getattr(codebook, _PREVALIDATED_ATTR, None) == m:
         return codebook
     return _validated_codebook(codebook, m)
 

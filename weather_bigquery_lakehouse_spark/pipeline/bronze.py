@@ -129,9 +129,20 @@ def land_records(
 
 
 def read_bronze(
-    spark: SparkSession, zone_dir: str, entity: str, schema: T.StructType
+    spark: SparkSession,
+    zone_dir: str,
+    entity: str,
+    schema: T.StructType,
+    ingestion_date: str,
 ) -> DataFrame:
+    """One ingestion date of a bronze entity zone. The ``_ingestion_date``
+    filter is a partition filter, so the other dates' files are never
+    opened — a day's read stays one day as history grows."""
     full = T.StructType(
         list(schema.fields) + [T.StructField("_source", T.StringType())]
     )
-    return spark.read.schema(full).json(os.path.join(zone_dir, "bronze", entity))
+    return (
+        spark.read.schema(full)
+        .json(os.path.join(zone_dir, "bronze", entity))
+        .where(F.col("_ingestion_date") == ingestion_date)
+    )

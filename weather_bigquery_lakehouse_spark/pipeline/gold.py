@@ -9,6 +9,11 @@ engineering upgrades over the reference, both documented in SURVEY.md §7:
     already-loaded `id_fact`s, so the daily rerun double-load bug of the
     reference (append with no dedup) cannot happen.
 
+Gold reads silver's parquet, never its lineage: the fact increment from
+the run date's partition, the dims from all retained silver (``dim_city``
+from the newest row per source id), so every historical fact row still
+joins them after their truncate-load, also for a city absent today.
+
 Key contract (checked by tests and the oracle): every id is
 sha2-256 of the natural key; fact FKs are RECOMPUTED hashes, so the fact
 build joins only dim_city (the one dim contributing attributes — J2), and
@@ -17,7 +22,9 @@ the date/condition dims need no join at all.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import os
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.keys import composite_key, surrogate_key
@@ -132,35 +139,34 @@ def idempotent_fact_append(
 def load_gold(
     spark: SparkSession,
     catalog: GoldCatalog,
-    silver_weather: DataFrame,
-    silver_ibge: DataFrame,
-    silver_cptec_cities: DataFrame,
+    zone_dir: str,
     modeling_date: str,
 ) -> dict[str, DataFrame]:
-    """Build all five gold tables and load them through the catalog.
+    """Build all five gold tables from the silver zone and load them
+    through the catalog; returns them read back from the catalog.
 
     Dim loads are truncate (type-1 refresh); the fact load is an
     idempotent append (left-anti on id_fact)."""
-    dim_city = build_dim_city(silver_ibge, silver_cptec_cities)
-    dim_update = build_date_dim(silver_weather, "atualizado_em", "id_update_date")
-    dim_forecast = build_date_dim(silver_weather, "data", "id_forecast_date")
-    dim_condition = build_dim_condition(silver_weather)
-    fact = build_fact_weather(silver_weather, dim_city, modeling_date)
 
-    for name, df in [
-        ("dim_city", dim_city),
-        ("dim_update_date", dim_update),
-        ("dim_forecast_date", dim_forecast),
-        ("dim_weather_condition", dim_condition),
-    ]:
-        catalog.write_table(df, name, mode="truncate")
+    def silver(entity: str) -> DataFrame:
+        return spark.read.parquet(os.path.join(zone_dir, "silver", entity))
 
-    idempotent_fact_append(spark, catalog, fact, "fact_weather")
+    def newest(entity: str) -> DataFrame:
+        by_id = Window.partitionBy("id").orderBy(F.col("_ingestion_date").desc())
+        ranked = silver(entity).withColumn("_rank", F.row_number().over(by_id))
+        return ranked.where("_rank = 1").drop("_rank")
 
-    return {
-        "dim_city": dim_city,
-        "dim_update_date": dim_update,
-        "dim_forecast_date": dim_forecast,
-        "dim_weather_condition": dim_condition,
-        "fact_weather": catalog.read_table(spark, "fact_weather"),
+    weather = silver("cptec_weather")
+    dims = {
+        "dim_city": build_dim_city(newest("ibge_cities"), newest("cptec_cities")),
+        "dim_update_date": build_date_dim(weather, "atualizado_em", "id_update_date"),
+        "dim_forecast_date": build_date_dim(weather, "data", "id_forecast_date"),
+        "dim_weather_condition": build_dim_condition(weather),
     }
+    for name, df in dims.items():
+        catalog.write_table(df, name, mode="truncate")
+    today = weather.where(F.col("_ingestion_date") == modeling_date)
+    dim_city = catalog.read_table(spark, "dim_city")
+    fact = build_fact_weather(today, dim_city, modeling_date)
+    idempotent_fact_append(spark, catalog, fact, "fact_weather")
+    return {name: catalog.read_table(spark, name) for name in [*dims, "fact_weather"]}

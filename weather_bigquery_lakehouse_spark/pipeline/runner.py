@@ -1,4 +1,4 @@
-"""Pipeline runner: bronze → silver → gold (→ maintenance) in one session.
+"""Pipeline runner: bronze → silver → gold (→ maintenance), one stage path.
 
 Replaces the reference's Airflow DAG sequencing
 (airflow/dags/bigquery_weather_dag.py:14-66 —
@@ -8,6 +8,14 @@ scheduler-agnostic :class:`DagSpec` (task ids + dependency edges +
 schedule/retry/catchup flags) drives the runner, and any scheduler
 (Airflow, cron, Trigger.AvailableNow) can render the same spec into its
 own DAG without the engine caring.
+
+Each task id maps to one stage in :data:`STAGES`, and every stage reads
+its inputs from the zones. So :func:`run_pipeline` (all daily tasks in
+one session) and :func:`execute_stage` (one task per scheduler
+invocation) run the same code. Silver reads and overwrites only the run
+date's partition and gold appends only that date's fact increment; the
+gold dims are rebuilt from all retained silver, and maintenance touches
+every date.
 """
 
 from __future__ import annotations
@@ -87,109 +95,48 @@ PIPELINE_DAG = DagSpec(
     ),
 )
 PIPELINE_DAG.validate()
+_DAILY = {t.task_id: t.upstream for t in PIPELINE_DAG.tasks if t.cadence == "daily"}
 
 
-def run_pipeline(
-    spark: SparkSession,
-    zone_dir: str,
-    warehouse_dir: str,
-    city_records: list[dict],
-    forecast_records: list[dict],
-    run_date: str | None = None,
-    dag: DagSpec = PIPELINE_DAG,
-) -> dict:
-    """One full daily run, executed in ``dag``'s topological order.
-    ``city_records``/``forecast_records`` come from the injected sources
-    (HTTP in production, fixtures in tests). Weekly-cadence tasks
-    (maintenance) are skipped here — schedulers run them via
-    :func:`run_maintenance` at their own cadence."""
-    run_date = run_date or dt.date.today().isoformat()
-    ctx: dict = {}
-
-    def _bronze_cities(sess: SparkSession) -> None:
-        bronze.land_records(
-            sess, city_records, bronze.CITY_PAYLOAD, zone_dir,
-            "ibge_cities", "IBGE API", run_date,
-        )
-
-    def _bronze_weather(sess: SparkSession) -> None:
-        bronze.land_records(
-            sess, forecast_records, bronze.FORECAST_PAYLOAD, zone_dir,
-            "cptec_weather", "CPTEC API", run_date,
-        )
-
-    def _silver(sess: SparkSession) -> None:
-        ctx["weather"] = silver.silver_weather(sess, zone_dir, run_date)
-        ctx["cities"], ctx["violations"] = silver.silver_cities(
-            sess, zone_dir, run_date
-        )
-        ctx["cptec_cities"] = silver.silver_cptec_cities(sess, zone_dir, run_date)
-
-    def _gold(sess: SparkSession) -> None:
-        ctx["catalog"] = GoldCatalog(warehouse_dir)
-        ctx["tables"] = gold.load_gold(
-            sess, ctx["catalog"], ctx["weather"], ctx["cities"],
-            ctx["cptec_cities"], modeling_date=run_date,
-        )
-
-    stages = {
-        "bronze_ingest_cities": _bronze_cities,
-        "bronze_ingest_weather": _bronze_weather,
-        "silver_transform": _silver,
-        "gold_load": _gold,
-    }
-    # Fail fast with a descriptive error instead of a KeyError mid-run: a
-    # custom dag may only reference executable stage ids (non-daily ids are
-    # dispatched by the scheduler, not here), and must include the ctx
-    # producers the gold stage consumes.
-    dag.validate()
-    daily_ids = {t.task_id for t in dag.tasks if t.cadence == "daily"}
-    unknown = daily_ids - set(stages)
-    if unknown:
-        raise ValueError(
-            f"dag {dag.dag_id}: daily task(s) {sorted(unknown)} have no "
-            f"executable stage; known stages: {sorted(stages)}"
-        )
-    # one-directional requirements down the ctx chain: gold consumes
-    # silver's ctx outputs and silver consumes both bronze landings, so a
-    # dag running a downstream stage must also run its producers — a
-    # silver-only dag would otherwise die mid-run on a missing bronze zone
-    # read, the same KeyError-class failure this check exists to prevent.
-    # Bronze-only partial dags (a re-landing backfill) are fine.
-    if "gold_load" in daily_ids and "silver_transform" not in daily_ids:
-        raise ValueError(
-            f"dag {dag.dag_id}: gold_load requires silver_transform — gold "
-            "consumes the silver stage's outputs"
-        )
-    _bronze_ids = {"bronze_ingest_cities", "bronze_ingest_weather"}
-    if "silver_transform" in daily_ids and not _bronze_ids <= daily_ids:
-        raise ValueError(
-            f"dag {dag.dag_id}: silver_transform requires "
-            f"{sorted(_bronze_ids)} — silver reads both bronze landings"
-        )
-    cadences = {t.task_id: t.cadence for t in dag.tasks}
-    executed = []
-    for task_id in dag.topological_order():
-        if cadences[task_id] != "daily":
-            continue
-        stages[task_id](spark)
-        executed.append(task_id)
-    return {
-        # .get: a partial dag (e.g. bronze-only backfill) has no gold ctx
-        "catalog": ctx.get("catalog"),
-        "tables": ctx.get("tables"),
-        "consistency_violations": ctx.get("violations"),
-        "executed": executed,
-    }
+def _bronze_ingest_cities(spark, zone_dir, run_date, city_records, **_) -> None:
+    bronze.land_records(
+        spark, city_records or [], bronze.CITY_PAYLOAD, zone_dir,
+        "ibge_cities", "IBGE API", run_date,
+    )
 
 
-def read_silver(spark: SparkSession, zone_dir: str, entity: str):
-    """Read a silver entity zone back from disk — the cross-process input
-    path for schedulers that run each DAG task in its own process (the
-    in-process runner hands DataFrames through ctx instead)."""
-    import os
+def _bronze_ingest_weather(spark, zone_dir, run_date, forecast_records, **_) -> None:
+    bronze.land_records(
+        spark, forecast_records or [], bronze.FORECAST_PAYLOAD, zone_dir,
+        "cptec_weather", "CPTEC API", run_date,
+    )
 
-    return spark.read.parquet(os.path.join(zone_dir, "silver", entity))
+
+def _silver_transform(spark, zone_dir, run_date, **_) -> None:
+    silver.silver_weather(spark, zone_dir, run_date)
+    silver.silver_cities(spark, zone_dir, run_date)
+    silver.silver_cptec_cities(spark, zone_dir, run_date)
+
+
+def _gold_load(spark, zone_dir, warehouse_dir, run_date, **_) -> dict:
+    return gold.load_gold(spark, GoldCatalog(warehouse_dir), zone_dir, run_date)
+
+
+def _zone_maintenance(spark, zone_dir, keep_dates, **_) -> dict:
+    return run_maintenance(spark, zone_dir, keep_dates)
+
+
+#: task id -> its stage. Every stage reads its inputs from the zones (the
+#: bronze landings from the records handed in), so each task can run in
+#: its own process. Stages look the tier functions up as module
+#: attributes at call time.
+STAGES = {
+    "bronze_ingest_cities": _bronze_ingest_cities,
+    "bronze_ingest_weather": _bronze_ingest_weather,
+    "silver_transform": _silver_transform,
+    "gold_load": _gold_load,
+    "zone_maintenance": _zone_maintenance,
+}
 
 
 def execute_stage(
@@ -201,46 +148,72 @@ def execute_stage(
     city_records: list[dict] | None = None,
     forecast_records: list[dict] | None = None,
     keep_dates: list[str] | None = None,
-) -> None:
-    """Execute ONE pipeline task in isolation — the entrypoint an external
-    scheduler (e.g. the Airflow DAG emitted by ``pipeline.airflow_emit``)
-    binds each task to. Unlike :func:`run_pipeline` (one session, outputs
-    handed through ctx), every stage here reads its inputs from the zones,
-    so tasks can run in separate processes exactly as a scheduler launches
-    them — the gold stage re-reads the silver zone the silver task wrote.
+) -> dict | None:
+    """Execute ONE pipeline task — the entrypoint an external scheduler
+    (e.g. the Airflow DAG emitted by ``pipeline.airflow_emit``) binds each
+    task to, and the one :func:`run_pipeline` loops over. Returns the
+    stage's result (gold: its five tables; maintenance: its reports)."""
+    if task_id not in STAGES:
+        raise ValueError(f"unknown task_id {task_id!r}; known: {sorted(STAGES)}")
+    return STAGES[task_id](
+        spark,
+        zone_dir=zone_dir,
+        warehouse_dir=warehouse_dir,
+        run_date=run_date or dt.date.today().isoformat(),
+        city_records=city_records,
+        forecast_records=forecast_records,
+        keep_dates=keep_dates,
+    )
+
+
+def run_pipeline(
+    spark: SparkSession,
+    zone_dir: str,
+    warehouse_dir: str,
+    city_records: list[dict],
+    forecast_records: list[dict],
+    run_date: str | None = None,
+    dag: DagSpec = PIPELINE_DAG,
+) -> dict:
+    """One full daily run: :func:`execute_stage` for each daily task of
+    ``dag``, in topological order. ``city_records``/``forecast_records``
+    come from the injected sources (HTTP in production, fixtures in
+    tests). Weekly-cadence tasks (maintenance) are skipped here —
+    schedulers run them via :func:`run_maintenance` at their own cadence.
     """
     run_date = run_date or dt.date.today().isoformat()
-    if task_id == "bronze_ingest_cities":
-        bronze.land_records(
-            spark, city_records or [], bronze.CITY_PAYLOAD, zone_dir,
-            "ibge_cities", "IBGE API", run_date,
+    # Fail fast instead of mid-run: every daily task needs a daily stage,
+    # and the tasks it reads from (its upstreams in PIPELINE_DAG) must run
+    # too. A bronze-only re-landing dag is fine.
+    dag.validate()
+    cadences = {t.task_id: t.cadence for t in dag.tasks}
+    daily = [t for t in dag.topological_order() if cadences[t] == "daily"]
+    unknown = set(daily) - set(_DAILY)
+    if unknown:
+        raise ValueError(
+            f"dag {dag.dag_id}: daily task(s) {sorted(unknown)} have no "
+            f"executable daily stage; daily stages: {sorted(_DAILY)}"
         )
-    elif task_id == "bronze_ingest_weather":
-        bronze.land_records(
-            spark, forecast_records or [], bronze.FORECAST_PAYLOAD, zone_dir,
-            "cptec_weather", "CPTEC API", run_date,
+    for task_id in daily:
+        missing = set(_DAILY[task_id]) - set(daily)
+        if missing:
+            raise ValueError(
+                f"dag {dag.dag_id}: {task_id} requires {sorted(missing)} — "
+                "it reads their outputs from the zones"
+            )
+    results = {
+        task_id: execute_stage(
+            spark, task_id, zone_dir, warehouse_dir, run_date,
+            city_records, forecast_records,
         )
-    elif task_id == "silver_transform":
-        silver.silver_weather(spark, zone_dir, run_date)
-        silver.silver_cities(spark, zone_dir, run_date)
-        silver.silver_cptec_cities(spark, zone_dir, run_date)
-    elif task_id == "gold_load":
-        gold.load_gold(
-            spark,
-            GoldCatalog(warehouse_dir),
-            read_silver(spark, zone_dir, "cptec_weather"),
-            read_silver(spark, zone_dir, "ibge_cities"),
-            read_silver(spark, zone_dir, "cptec_cities"),
-            modeling_date=run_date,
-        )
-    elif task_id == "zone_maintenance":
-        run_maintenance(spark, zone_dir, keep_dates=keep_dates)
-    else:
-        known = [
-            "bronze_ingest_cities", "bronze_ingest_weather",
-            "silver_transform", "gold_load", "zone_maintenance",
-        ]
-        raise ValueError(f"unknown task_id {task_id!r}; known: {known}")
+        for task_id in daily
+    }
+    tables = results.get("gold_load")
+    return {
+        "catalog": GoldCatalog(warehouse_dir) if tables is not None else None,
+        "tables": tables,
+        "executed": daily,
+    }
 
 
 def run_maintenance(

@@ -7,7 +7,11 @@ instead of the reference's O(columns) eager count() jobs:
             the 3-format coalesce chain, drop `indice_uv`, trim / null-
             filter / dedup, stamp `_processing_date`.
   cities:   flatten nested structs to `parent_child` columns, same
-            cleaning, name↔id consistency check (A1).
+            cleaning.
+
+Each run reads only its date's bronze partition and overwrites only that
+silver partition (the session runs partitionOverwriteMode=dynamic), so a
+day's silver work does not grow with history.
 
 Per-run cleaning accounting (the counts the reference PRINTS per step,
 data_cleaning.py:8-53) is persisted under ``silver/_quality/<entity>`` via
@@ -34,7 +38,6 @@ from ..functions.cleaning import (
 )
 from ..functions.dates import parse_date_multi
 from ..functions.flatten import flatten_structs
-from ..functions.profiling import consistency_violations
 from ..io.writers import write_table
 from .bronze import CITY_PAYLOAD, FORECAST_PAYLOAD, read_bronze
 
@@ -124,7 +127,9 @@ def silver_weather(
     Mirrors reference bronze_to_silver.py:30-86: the explode replaces the
     pandas `.explode('clima')` done at ingest (F13) — done HERE, the raw
     array survives in bronze."""
-    bronze = read_bronze(spark, zone_dir, "cptec_weather", FORECAST_PAYLOAD)
+    bronze = read_bronze(
+        spark, zone_dir, "cptec_weather", FORECAST_PAYLOAD, processing_date
+    )
     exploded = bronze.select(
         F.col("nome").alias("cidade"),
         "estado",
@@ -164,12 +169,14 @@ def silver_weather(
 
 def silver_cities(
     spark: SparkSession, zone_dir: str, processing_date: str
-) -> tuple[DataFrame, DataFrame]:
-    """Bronze city payloads → flat silver table + consistency violations.
+) -> DataFrame:
+    """Bronze city payloads → flat silver table.
 
     Struct flattening is a pure projection (F12) — the Spark-native
     replacement for `pd.json_normalize` with prefix renames."""
-    bronze = read_bronze(spark, zone_dir, "ibge_cities", CITY_PAYLOAD)
+    bronze = read_bronze(
+        spark, zone_dir, "ibge_cities", CITY_PAYLOAD, processing_date
+    )
     flat = normalize_names(flatten_structs(bronze))
     # Reference keeps id, nome + region attributes (bronze_ingest.py:40-47)
     projected = flat.select(
@@ -191,14 +198,13 @@ def silver_cities(
             "_processing_date", F.lit(processing_date).cast("date")
         )
     )
-    violations = consistency_violations(cleaned, "nome", "id")
     write_table(
         cleaned,
         os.path.join(zone_dir, "silver", "ibge_cities"),
         partition_by=["_ingestion_date"],
     )
     q.write_report(spark, zone_dir, "ibge_cities", processing_date)
-    return cleaned, violations
+    return cleaned
 
 
 def silver_cptec_cities(
@@ -206,7 +212,9 @@ def silver_cptec_cities(
 ) -> DataFrame:
     """CPTEC city registry (id ↔ name) derived from the forecast payloads —
     the reference lands it as its own bronze CSV (bronze_ingest.py:53-55)."""
-    bronze = read_bronze(spark, zone_dir, "cptec_weather", FORECAST_PAYLOAD)
+    bronze = read_bronze(
+        spark, zone_dir, "cptec_weather", FORECAST_PAYLOAD, processing_date
+    )
     cities = bronze.select(
         F.col("codigo").alias("id"), "nome", "estado", "_source", "_ingestion_date"
     )

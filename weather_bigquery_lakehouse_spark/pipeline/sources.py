@@ -22,6 +22,7 @@ shard), which is shape-compatible with these adapters.
 
 from __future__ import annotations
 
+import datetime as dt
 import random
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
@@ -187,26 +188,22 @@ def fixture_forecast_rows(
     n_cities: int = 40, days: int = 6, seed: int = 42, ingestion_date: str = "2024-03-25"
 ) -> list[dict]:
     """CPTEC-shaped forecast records: one record per city with a `clima`
-    ARRAY (one element per day), exploded at silver (bronze_ingest.py:59-60).
+    ARRAY (one element per day, the horizon starting at
+    ``ingestion_date``), exploded at silver (bronze_ingest.py:59-60).
     Injects the dirty-data the cleaning tier must handle: mixed date
     formats, stray whitespace, NULLs, exact duplicates."""
     rng = random.Random(seed)
-    base_day = 25
+    day0 = dt.date.fromisoformat(ingestion_date)
+    # the three `atualizado_em` formats the cleaning tier must collapse
+    stamps = [day0.strftime(f) for f in ("%Y-%m-%d", "%d/%m/%Y", "%m-%d-%Y")]
     rows = []
     for i in range(n_cities):
-        fmt = i % 3
-        if fmt == 0:
-            atualizado = "2024-03-25"
-        elif fmt == 1:
-            atualizado = "25/03/2024"
-        else:
-            atualizado = "03-25-2024"
         clima = []
         for d in range(days):
             cond = _CONDITIONS[rng.randrange(len(_CONDITIONS))]
             clima.append(
                 {
-                    "data": f"2024-03-{base_day + d:02d}",
+                    "data": (day0 + dt.timedelta(days=d)).isoformat(),
                     "condicao": cond[0],
                     "condicao_desc": (" " + cond[1] + " ") if rng.random() < 0.2 else cond[1],
                     "min": rng.randrange(12, 20) if rng.random() > 0.05 else None,
@@ -218,7 +215,7 @@ def fixture_forecast_rows(
             "codigo": 4700 + i,
             "nome": f"Cidade {i:03d}" if rng.random() > 0.1 else f"  Cidade {i:03d} ",
             "estado": "SP",
-            "atualizado_em": atualizado,
+            "atualizado_em": stamps[i % 3],
             "clima": clima,
         }
         rows.append(row)
