@@ -51,7 +51,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from weather_bigquery_lakehouse_spark.session import build_session
+from weather_bigquery_lakehouse_spark.session import build_session, driver_jvm_args
 from weather_bigquery_lakehouse_spark.operators import dedup as _dd
 from weather_bigquery_lakehouse_spark.plans import ALL_QUERIES
 from weather_bigquery_lakehouse_spark.plans import extensions as _ext
@@ -467,6 +467,9 @@ def main() -> None:
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "stream_shuffle_partitions": stream_parts,
         "detail": detail_name,
+        # records before r15 ran with the JDK's default JIT tiering; the
+        # driver JVM's -X/-XX options tell them apart from later ones
+        "jvm_args": driver_jvm_args(spark),
     }
     if load_avg[0] > LOAD_WARN:
         summary["load_warning"] = (

@@ -1014,6 +1014,39 @@ def test_codebook_validated_for_other_m_raises(spark):
         sim.pq_topk(emb, emb.limit(1), dim=8, m=8, n_codes=4, codebook=cb4)
 
 
+def test_pq_distortion_encoded_for_other_m_raises(spark):
+    """A supplied ``encoded`` frame must hold the scorer's m subspaces per
+    vector: an m=4 encode scored with m=8, or an m=8 encode scored with
+    m=4, raises when evaluated; the check starts no job of its own, and a
+    frame without the encode's columns raises at once."""
+    emb = spark.createDataFrame(
+        [(i, [float((i * 7 + j) % 5) for j in range(8)]) for i in range(6)],
+        "vec_id long, embedding array<double>",
+    )
+    cells = emb.select(
+        F.col("vec_id").alias("neighbor_id"), "embedding", F.lit(0).alias("cell_id")
+    )
+
+    def encode(m):
+        cb = sim.pq_codebook_standin(emb, dim=8, m=m, n_codes=4)
+        return sim.pq_encode_cells(cells, dim=8, m=m, codebook=cb)
+
+    enc4, enc8 = encode(4), encode(8)
+    sc = spark.sparkContext
+    sc.setJobGroup("pq_distortion_guard", "pq_distortion_guard")
+    try:
+        checked = sim.pq_distortion(emb, dim=8, m=4, encoded=enc4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not sc.statusTracker().getJobIdsForGroup("pq_distortion_guard")
+    assert checked.collect() == sim.pq_distortion(emb, dim=8, m=4, n_codes=4).collect()
+    for m, enc in [(8, enc4), (4, enc8)]:
+        with pytest.raises(Exception, match=f"exactly {m} rows with sub_id in"):
+            sim.pq_distortion(emb, dim=8, m=m, encoded=enc).collect()
+    with pytest.raises(ValueError, match=r"lacks \['__d'\]"):
+        sim.pq_distortion(emb, dim=8, m=4, encoded=enc4.drop("__d"))
+
+
 def test_contrastive_pairs_hardest_positive_and_negative(spark):
     from weather_bigquery_lakehouse_spark.operators import similarity as sim
 

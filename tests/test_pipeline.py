@@ -4,6 +4,8 @@ the reference's star-schema contracts + this engine's idempotency upgrade."""
 from __future__ import annotations
 
 import hashlib
+import re
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -229,6 +231,61 @@ def test_day_two_silver_touches_only_its_partition(spark, two_days):
         q = spark.read.parquet(str(zone / "silver" / "_quality" / entity))
         got = [r["rows_in"] for r in q.where(F.col("_processing_date") == DAYS[1]).collect()]
         assert got == [expected, expected], entity
+
+
+def _jobs_started(spark, fn) -> int:
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4()}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _partition_filters(df) -> list[str]:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
+
+
+def test_fact_append_prunes_history_to_increment_dates(spark, two_days, monkeypatch):
+    """The idempotent append takes the increment's dates from its caller
+    (the daily load passes its run date): it starts no job beyond the
+    history read's own schema inference, the existing-keys scan is
+    partition-pruned to exactly those dates, and an increment row dated
+    outside them fails the write."""
+    import datetime
+
+    from weather_bigquery_lakehouse_spark.io.catalog import GoldCatalog
+    from weather_bigquery_lakehouse_spark.pipeline.gold import idempotent_fact_append
+
+    cat = GoldCatalog(two_days["wh"])
+    written = []
+    monkeypatch.setattr(cat, "write_table", lambda df, *a, **k: written.append(df))
+    days = [datetime.date.fromisoformat(d) for d in DAYS]
+    both = spark.createDataFrame(
+        [("k", days[0]), ("k", days[1])], "id_fact string, _ingestion_date date"
+    )
+    day2 = both.where(F.col("_ingestion_date") == days[1])
+
+    history_read = _jobs_started(
+        spark, lambda: cat.read_table(spark, "fact_weather", columns=["id_fact"])
+    )
+    append = _jobs_started(
+        spark, lambda: idempotent_fact_append(spark, cat, day2, "fact_weather", [DAYS[1]])
+    )
+    assert append == history_read
+    idempotent_fact_append(spark, cat, both, "fact_weather", list(DAYS))
+    idempotent_fact_append(spark, cat, both, "fact_weather", [DAYS[1]])
+
+    (scan,) = _partition_filters(written[0])
+    assert DAYS[1] in scan and DAYS[0] not in scan
+    (scan,) = _partition_filters(written[1])
+    assert DAYS[0] in scan and DAYS[1] in scan
+    assert written[1].count() == 2
+    with pytest.raises(Exception, match="outside"):
+        written[2].collect()
 
 
 def test_fixture_forecasts_start_at_ingestion_date():

@@ -6,8 +6,8 @@ Same methodology as bench.py (noop sink, PRE_REP state resets, warm-up)
 but for a chosen subset, so an optimization's before/after can be
 measured without paying the full 98-entry sweep. Prints one JSON line:
 {"probe": [start, end], "entries": {name: {"runs": [...], "median_tail":
-..., "min": ...}}}. median_tail is the r13 convention (median of runs
-2..N).
+..., "min": ...}}, "jvm_args": [...]}. median_tail is the r13 convention
+(median of runs 2..N); jvm_args are the driver JVM's -X/-XX options.
 """
 
 from __future__ import annotations
@@ -20,7 +20,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from weather_bigquery_lakehouse_spark.session import build_session
+from weather_bigquery_lakehouse_spark.session import build_session, driver_jvm_args
 from weather_bigquery_lakehouse_spark.plans import ALL_QUERIES
 
 
@@ -59,7 +59,8 @@ def main() -> None:
             "min": min(times),
         }
     p1 = _cpu_probe_s()
-    print(json.dumps({"probe": [p0, p1], "entries": out}))
+    print(json.dumps({"probe": [p0, p1], "entries": out,
+                      "jvm_args": driver_jvm_args(spark)}))
     spark.stop()
 
 

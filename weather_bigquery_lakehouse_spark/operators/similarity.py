@@ -745,10 +745,34 @@ def pq_distortion(
     (``embeddings``, ``codebook``) pair (the struct-min's ``__d`` IS
     min(__d): lexicographic struct order compares ``__d`` first) —
     skipping the inline encode entirely; ``codebook``/``n_codes`` are
-    then unused. The caller asserts that equivalence."""
+    then unused. The caller asserts that equivalence; a frame without
+    those columns raises here, and one that does not hold exactly ``m``
+    rows with ``sub_id`` in ``[0, m)`` per vector (an encode made for
+    another ``m``) raises when the result is evaluated — the check rides
+    in the per-vector aggregate, so it adds no job."""
     if encoded is not None:
-        per_sub = encoded.select(
-            F.col("neighbor_id").alias("__did"), "sub_id", "__d"
+        missing = {"neighbor_id", "sub_id", "__d"} - set(encoded.columns)
+        if missing:
+            raise ValueError(
+                f"encoded frame lacks {sorted(missing)}; pass pq_encode_cells "
+                "output (neighbor_id, sub_id, __d)"
+            )
+        per_vec = encoded.groupBy(F.col("neighbor_id").alias("__did")).agg(
+            F.count("*").alias("__n"),
+            F.min("sub_id").alias("__lo"),
+            F.max("sub_id").alias("__hi"),
+            F.sum("__d").alias("__d"),
+        )
+        whole = (F.col("__n") == m) & (F.col("__lo") >= 0) & (F.col("__hi") < m)
+        msg = (
+            f"encoded frame does not hold exactly {m} rows with sub_id in "
+            f"[0, {m}) per vector; was it encoded with another m?"
+        )
+        # one row per vector: the shared tail's distinct count and sum
+        # read the same totals as from the per-subspace rows
+        per_sub = per_vec.select(
+            "__did",
+            F.coalesce(F.assert_true(whole, msg), F.col("__d")).alias("__d"),
         )
     else:
         sub = _pq_sub(dim, m)

@@ -108,6 +108,7 @@ def idempotent_fact_append(
     catalog: GoldCatalog,
     fact: DataFrame,
     table: str,
+    dates: list[str],
     key_col: str = "id_fact",
     date_col: str = "_ingestion_date",
 ) -> None:
@@ -117,21 +118,21 @@ def idempotent_fact_append(
 
     Idempotency anti-join, scoped for scale: only the history partitions
     whose ``date_col`` appears in this increment can collide, so the
-    existing-keys read is pruned to those (tiny distinct date list → the
-    scan skips everything else). The history side is never broadcast — it
-    grows without bound; AQE picks the join strategy."""
+    existing-keys read is pruned to ``dates``, the increment's dates as
+    the caller knows them (the daily load: its run date). A fact row
+    dated outside ``dates`` fails the write instead of escaping the
+    anti-join; the check rides in the write, so finding the dates costs
+    no job. The history side is never broadcast — it grows without
+    bound; AQE picks the join strategy."""
+    date_list = ", ".join(f"'{d}'" for d in dates)
+    in_dates = f"{date_col} IN ({date_list})" if dates else "false"
+    outside = f"{table} increment holds a {date_col} outside {list(dates)}"
+    fact = fact.withColumn(
+        date_col,
+        F.coalesce(F.assert_true(F.expr(in_dates), outside), F.col(date_col)),
+    )
     if catalog.table_exists(table):
-        inc_dates = [
-            str(r[date_col])
-            for r in fact.select(date_col).distinct().collect()
-        ]
-        date_list = ", ".join(f"'{d}'" for d in inc_dates)
-        existing = catalog.read_table(
-            spark,
-            table,
-            columns=[key_col],
-            where=f"{date_col} IN ({date_list})" if inc_dates else "false",
-        )
+        existing = catalog.read_table(spark, table, columns=[key_col], where=in_dates)
         fact = fact.join(existing, key_col, "left_anti")
     catalog.write_table(fact, table, mode="append", partition_by=[date_col])
 
@@ -168,5 +169,5 @@ def load_gold(
     today = weather.where(F.col("_ingestion_date") == modeling_date)
     dim_city = catalog.read_table(spark, "dim_city")
     fact = build_fact_weather(today, dim_city, modeling_date)
-    idempotent_fact_append(spark, catalog, fact, "fact_weather")
+    idempotent_fact_append(spark, catalog, fact, "fact_weather", [modeling_date])
     return {name: catalog.read_table(spark, name) for name in [*dims, "fact_weather"]}

@@ -273,11 +273,11 @@ def fact_rerun_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .curation import _gold_workdir  # lazy: curation imports from here
 
     # localCheckpoint: the fact lineage (join + 3 sha2 keys) is consumed by
-    # up to four actions below (two date probes, two writes) — pin ONE
-    # build instead of recomputing it per action
+    # both writes below — pin ONE build instead of recomputing it per write
+    day = "1998-08-02"
     fact = (
         fact_orders_keys(spark, sf_dir)
-        .withColumn("_ingestion_date", F.lit("1998-08-02").cast("date"))
+        .withColumn("_ingestion_date", F.lit(day).cast("date"))
         .localCheckpoint(eager=True)
     )
     root = os.path.join(_gold_workdir(sf_dir), "fact_rerun")
@@ -285,8 +285,8 @@ def fact_rerun_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
     # land the SAME increment twice — the rerun must be a complete no-op
     # (repeat registry sweeps in one process re-land again: still a no-op,
     # which is itself the contract under test)
-    idempotent_fact_append(spark, catalog, fact, "fact_orders")
-    idempotent_fact_append(spark, catalog, fact, "fact_orders")
+    idempotent_fact_append(spark, catalog, fact, "fact_orders", [day])
+    idempotent_fact_append(spark, catalog, fact, "fact_orders", [day])
     return catalog.read_table(spark, "fact_orders").select(
         "id_fact",
         "id_customer",

@@ -12,6 +12,8 @@ declaratively, with every knob that matters at 100 TB scale:
   (the DuckDB oracle reads the same parquet with naive timestamps).
 - shuffle partitions sized for the test harness; on a real cluster this is
   overridden by AQE's coalescing + `spark.sql.adaptive.advisoryPartitionSizeInBytes`.
+- a driver-JVM JIT policy that keeps the C2 compiler off the planner
+  (`DRIVER_JIT_OPTIONS`, see docs/SCALE.md "Driver JIT policy").
 """
 
 from __future__ import annotations
@@ -22,6 +24,28 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+# Driver JIT policy. The driver JVM lives for one run (one Airflow task, one
+# pipeline day), and at a day's data size most of its CPU goes to JIT-
+# compiling Spark's analyzer, planner, writer and scheduler code, not to the
+# tasks: C2 compiler threads were the largest single consumer of a daily run.
+# That code is megamorphic and runs thousands (not millions) of times per
+# run, so C1 code is good enough for it. Raising the four tier-4 (C2)
+# thresholds 10x over the JDK 17 defaults keeps it in C1, while generated
+# loops over hundreds of thousands of rows still cross the back-edge
+# threshold and get C2. A sweep (x3 to x100, and C1 only) chose x10: higher
+# factors, and C1 only, made warm large-scale queries slower in wall time.
+_JDK17_TIER4_THRESHOLDS = {
+    "Tier4InvocationThreshold": 5000,
+    "Tier4MinInvocationThreshold": 600,
+    "Tier4CompileThreshold": 15000,
+    "Tier4BackEdgeThreshold": 40000,
+}
+C2_THRESHOLD_SCALE = 10
+DRIVER_JIT_OPTIONS = " ".join(
+    f"-XX:{flag}={default * C2_THRESHOLD_SCALE}"
+    for flag, default in _JDK17_TIER4_THRESHOLDS.items()
+)
 
 
 def build_session(
@@ -37,6 +61,10 @@ def build_session(
     secret key, path-style flag) — the Spark-idiomatic home for what the
     reference pokes into the live Hadoop conf per call
     (reference src/etl/utils/bucket.py:15-21).
+
+    The driver JVM gets ``DRIVER_JIT_OPTIONS`` as
+    ``spark.driver.extraJavaOptions``; an ``extra_conf`` value for that key
+    replaces it. It only takes effect when this call starts the JVM.
     """
     builder = (
         SparkSession.builder.appName(app_name)
@@ -55,6 +83,7 @@ def build_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.extraJavaOptions", DRIVER_JIT_OPTIONS)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
         # The fixture tables store event timestamps as parquet
@@ -79,6 +108,14 @@ def build_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def driver_jvm_args(spark: SparkSession) -> list[str]:
+    """The ``-X``/``-XX`` arguments the running driver JVM was started with,
+    as it reports them (``RuntimeMXBean.getInputArguments``)."""
+    runtime = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    args = runtime.getRuntimeMXBean().getInputArguments()
+    return [str(a) for a in args if str(a).startswith("-X")]
 
 
 def get_session() -> SparkSession:
