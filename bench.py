@@ -24,6 +24,12 @@ timings, including the discarded cold rep, ship in "runs" for
 auditability. Set SPARK_GRAFT_BENCH_LEGACY_MEDIAN=1 to reproduce the
 pre-r13 convention (median over all reps) for cross-round continuity.
 
+Owner rule for trained state several entries share (`operators/
+artifacts.py`): the first entry in sweep order that builds an artifact
+times its cold build on every rep; later entries that read it run warm
+(see `time_reps`, which `tools/profile_entry.py` shares — a solo profile
+of a sibling times its cold build).
+
 The JSON line is additionally NOISE-EVIDENT (round-6 verdict demand: the
 official r6 record read as a +34% regression that was actually box load):
 - "value_floor" = sum of per-query MIN reps — the best-case the plans
@@ -52,6 +58,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from weather_bigquery_lakehouse_spark.session import build_session, driver_jvm_args
+from weather_bigquery_lakehouse_spark.operators import artifacts
 from weather_bigquery_lakehouse_spark.operators import dedup as _dd
 from weather_bigquery_lakehouse_spark.plans import ALL_QUERIES
 from weather_bigquery_lakehouse_spark.plans import extensions as _ext
@@ -196,17 +203,18 @@ EXTENDED = [
     "mixture_temperature_sample",
     "embedding_covariance",
     # round-8: the trained-quantizer gates OWN the cold k-means builds
-    # (PRE_REP purges their one-slot memos each rep); ann_recall_report
-    # runs after them over the warm shared frames — the production shape,
-    # where one registry sweep trains each quantizer once (the
-    # embedding_pair_clusters / embedding_dup_clusters precedent).
+    # (they run first, so time_reps times their builds cold every rep);
+    # ann_recall_report runs after them over the warm shared frames — the
+    # production shape, where one registry sweep trains each quantizer
+    # once (the embedding_pair_clusters / embedding_dup_clusters
+    # precedent).
     "ann_kmeans_codebook",
     "ann_kmeans_centroids",
     "ann_recall_report",
     "ivf_cell_occupancy",
     "cardinality_hll_documents",
     # round-8 late additions: bpe_merge_table OWNS the cold tokenizer
-    # training (PRE_REP purges the one-slot memo); bpe_vocab and
+    # training (it runs first of the three; see time_reps); bpe_vocab and
     # bpe_token_stats run after it over the warm trained state — the
     # production shape (train once, consume everywhere).
     # snapshot_diff_orders lands its two versioned snapshots on first
@@ -268,42 +276,6 @@ def _reset_chunk_index_state(sf_dir: str) -> None:
             shutil.rmtree(os.path.join(root, sub), ignore_errors=True)
 
 
-def _reset_pair_cluster_cache(_sf_dir: str) -> None:
-    """embedding_dup_clusters OWNS the iterative pair+CC cost in this
-    record: purge the shared cluster memo before each of its reps so its
-    median times the cold build. The sibling audits (contrastive_pairs,
-    cluster_label_purity) run AFTER it in EXTENDED and are timed over the
-    warm shared frame — the production shape, where one registry sweep
-    derives clusters once (round-6 verdict #5)."""
-    from weather_bigquery_lakehouse_spark.operators.similarity import (
-        _PAIR_CLUSTER_CACHE,
-    )
-
-    _PAIR_CLUSTER_CACHE.clear()
-
-
-def _reset_kmeans_codebook_cache(_sf_dir: str) -> None:
-    """ann_kmeans_codebook owns the cold PQ-codebook training cost."""
-    from weather_bigquery_lakehouse_spark.operators.kmeans import _PQ_CB_CACHE
-
-    _PQ_CB_CACHE.clear()
-
-
-def _reset_kmeans_centroid_cache(_sf_dir: str) -> None:
-    """ann_kmeans_centroids owns the cold IVF-centroid training cost."""
-    from weather_bigquery_lakehouse_spark.operators.kmeans import _CENTROID_CACHE
-
-    _CENTROID_CACHE.clear()
-
-
-def _reset_bpe_cache(_sf_dir: str) -> None:
-    """bpe_merge_table owns the cold tokenizer-training cost."""
-    from weather_bigquery_lakehouse_spark.operators.bpe import _BPE_CACHE
-
-    _BPE_CACHE.clear()
-
-
-# per-query state reset run before EACH rep (outside the timed section)
 def _reset_covariance_cache(_sf_dir: str) -> None:
     """embedding_covariance cache()s its dim²-bounded stats frame so the
     g/s/n slices share ONE corpus pass within a run — but Spark's
@@ -318,14 +290,65 @@ def _reset_covariance_cache(_sf_dir: str) -> None:
     purge_covariance_cache()
 
 
+# per-entry reset of state kept outside the artifact store, run before
+# EACH rep (outside the timed section)
 PRE_REP = {
     "streaming_chunk_index": _reset_chunk_index_state,
-    "embedding_dup_clusters": _reset_pair_cluster_cache,
-    "ann_kmeans_codebook": _reset_kmeans_codebook_cache,
-    "ann_kmeans_centroids": _reset_kmeans_centroid_cache,
-    "bpe_merge_table": _reset_bpe_cache,
     "embedding_covariance": _reset_covariance_cache,
 }
+
+
+def warm_up(spark, sf_dir: str) -> None:
+    """Warm up the JVM paths every query shares (codegen, parquet reader,
+    shuffle machinery, broadcast) so timings reflect steady-state cost.
+    Round-12 negative result (docs/BENCH_NOTES.md): extending this to
+    explicit exchange/broadcast/sort warm-up statements did NOT shrink
+    the ~4× first-rep cost of heavy entries — that cost is per-plan
+    whole-stage-codegen compile plus first-touch page-cache reads of
+    the sf0.1 parquet, neither of which a generic warm-up can pre-pay —
+    so the warm-up stays minimal rather than adding sweep overhead."""
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
+
+
+def cpu_probe() -> float:
+    """Single-thread CPU probe (round-11 lesson): a VM can run 2x slow at
+    1-min load 0.1 — HOST-level contention/frequency shows in neither
+    load_avg nor /proc/stat steal, so the record carries a fixed-work
+    probe. During the round-11 slow window (every query a uniform ~2x
+    the r10 quiet record at 1-min load 0.13) this loop timed ~1.3-1.5 s;
+    cross-round comparisons should ratio their probes before reading any
+    per-query delta as a plan change."""
+    t0 = time.perf_counter()
+    s = 0
+    for i in range(10_000_000):
+        s += i * i
+    return round(time.perf_counter() - t0, 3)
+
+
+def time_reps(spark, sf_dir: str, name: str, reps: int) -> list[float]:
+    """Wall-clock of ``reps`` noop-sink runs of registry entry ``name``.
+
+    Owner rule for the trained artifacts entries share
+    (``operators/artifacts.py``): the keys the FIRST rep adds to the store
+    are the entry's own, and they are forgotten before each later rep, so
+    every rep of the entry that builds an artifact times the cold build,
+    while an entry whose first rep finds the artifact built by an earlier
+    entry runs warm on every rep."""
+    fn = ALL_QUERIES[name].fn
+    owned: set = set()
+    times: list[float] = []
+    for rep in range(reps):
+        PRE_REP.get(name, lambda _d: None)(sf_dir)
+        artifacts.forget(owned)
+        held = artifacts.held()
+        spark.sparkContext.setJobDescription(f"entry:{name}")
+        start = time.perf_counter()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        times.append(round(time.perf_counter() - start, 3))
+        if rep == 0:
+            owned = artifacts.held() - held
+    return times
 
 
 def main() -> None:
@@ -354,17 +377,7 @@ def main() -> None:
         )
 
     spark = build_session(app_name="wbl_bench")
-
-    # Warm up the JVM paths every query shares (codegen, parquet reader,
-    # shuffle machinery, broadcast) so timings reflect steady-state cost.
-    # Round-12 negative result (docs/BENCH_NOTES.md): extending this to
-    # explicit exchange/broadcast/sort warm-up statements did NOT shrink
-    # the ~4× first-rep cost of heavy entries — that cost is per-plan
-    # whole-stage-codegen compile plus first-touch page-cache reads of
-    # the sf0.1 parquet, neither of which a generic warm-up can pre-pay —
-    # so the warm-up stays minimal rather than adding sweep overhead.
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
+    warm_up(spark, sf_dir)
 
     # r13 convention: reps=4, discard the first (cold) rep, median of the
     # remaining 3. Legacy mode keeps median-of-all for continuity records.
@@ -378,21 +391,7 @@ def main() -> None:
     LOAD_WARN = 4.0
     load_avg = [round(x, 2) for x in os.getloadavg()]
 
-    # Single-thread CPU probe (round-11 lesson): a VM can run 2x slow at
-    # 1-min load 0.1 — HOST-level contention/frequency shows in neither
-    # load_avg nor /proc/stat steal, so the record carries a fixed-work
-    # probe. During the round-11 slow window (every query a uniform
-    # ~2x the r10 quiet record at 1-min load 0.13) this loop timed
-    # ~1.3-1.5 s; cross-round comparisons should ratio their probes
-    # before reading any per-query delta as a plan change.
-    def _cpu_probe_s() -> float:
-        t0 = time.perf_counter()
-        s = 0
-        for i in range(10_000_000):
-            s += i * i
-        return round(time.perf_counter() - t0, 3)
-
-    cpu_probe_s = _cpu_probe_s()
+    cpu_probe_s = cpu_probe()
 
     # Each entry's start offset (seconds since the first timed query) ships
     # in the detail file: when a co-tenant burst lands inside a sweep, the
@@ -407,16 +406,8 @@ def main() -> None:
         medians: dict[str, float] = {}
         raw: dict[str, list[float]] = {}
         for name in names:
-            fn = ALL_QUERIES[name].fn
             entry_offsets[name] = round(time.perf_counter() - sweep_t0, 1)
-            times: list[float] = []
-            for _ in range(reps):
-                PRE_REP.get(name, lambda _d: None)(sf_dir)
-                start = time.perf_counter()
-                df = fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                times.append(round(time.perf_counter() - start, 3))
-            raw[name] = times
+            raw[name] = times = time_reps(spark, sf_dir, name, reps)
             steady = times[1:] if discard_first else times
             medians[name] = round(statistics.median(steady), 3)
         return medians, raw
@@ -436,9 +427,9 @@ def main() -> None:
     # samples make window drift machine-evident: a stable triple means
     # per-entry deltas are plan-attributable; a rising one means the
     # sweep outran its window and the record says so itself.
-    cpu_probe_mid_s = _cpu_probe_s()
+    cpu_probe_mid_s = cpu_probe()
     extended, extended_runs = run(EXTENDED)
-    cpu_probe_end_s = _cpu_probe_s()
+    cpu_probe_end_s = cpu_probe()
 
     total = round(sum(timings.values()), 3)
     floor_total = round(sum(min(t) for t in runs.values()), 3)

@@ -961,6 +961,7 @@ def test_embedding_pair_clusters_memo_shares_work(spark):
     """The audit family's shared front end: same cache_key → the SAME
     checkpointed frames come back (the CC iteration runs once per sweep);
     no key → fresh frames; results identical either way."""
+    from weather_bigquery_lakehouse_spark.operators import artifacts
     from weather_bigquery_lakehouse_spark.operators import similarity as sim
 
     emb = spark.createDataFrame(
@@ -968,7 +969,7 @@ def test_embedding_pair_clusters_memo_shares_work(spark):
         "vec_id long, embedding array<float>",
     )
     planes = [[0.3, 0.7]]
-    sim._PAIR_CLUSTER_CACHE.clear()
+    artifacts.forget(artifacts.held())
     p1, l1 = sim.embedding_pair_clusters(emb, planes, 0.3, cache_key="k")
     p2, l2 = sim.embedding_pair_clusters(emb, planes, 0.3, cache_key="k")
     assert p1 is p2 and l1 is l2  # memo hit: shared WORK, not a rebuild
@@ -977,7 +978,7 @@ def test_embedding_pair_clusters_memo_shares_work(spark):
     key_rows = {(r.node, r.comp) for r in l1.collect()}
     fresh_rows = {(r.node, r.comp) for r in l3.collect()}
     assert key_rows == fresh_rows and len(key_rows) == 4
-    sim._PAIR_CLUSTER_CACHE.clear()
+    artifacts.forget(artifacts.held())
 
 
 def test_pq_incomplete_codebook_raises(spark):

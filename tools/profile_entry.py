@@ -2,12 +2,16 @@
 
     python tools/profile_entry.py <reps> <name> [name ...]
 
-Same methodology as bench.py (noop sink, PRE_REP state resets, warm-up)
-but for a chosen subset, so an optimization's before/after can be
-measured without paying the full 98-entry sweep. Prints one JSON line:
-{"probe": [start, end], "entries": {name: {"runs": [...], "median_tail":
-..., "min": ...}}, "jvm_args": [...]}. median_tail is the r13 convention
-(median of runs 2..N); jvm_args are the driver JVM's -X/-XX options.
+Runs bench.py's warm-up, CPU probe and rep loop (`bench.time_reps`) on a
+chosen subset, so an optimization's before/after can be measured without
+paying the full 98-entry sweep. Entries run in the order given, under
+bench's owner rule: the first entry that builds a shared trained artifact
+times its cold build on every rep, later ones read it warm. Prints one
+JSON line: {"probe": [start, end], "entries": {name: {"runs": [...],
+"median_tail": ..., "min": ...}}, "jvm_args": [...]}. median_tail is the
+r13 convention (median of runs 2..N); jvm_args are the driver JVM's
+-X/-XX options. Bad arguments exit with a usage message before the JVM
+starts.
 """
 
 from __future__ import annotations
@@ -16,53 +20,45 @@ import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench
 from weather_bigquery_lakehouse_spark.session import build_session, driver_jvm_args
 from weather_bigquery_lakehouse_spark.plans import ALL_QUERIES
 
-
-def _cpu_probe_s() -> float:
-    t0 = time.perf_counter()
-    s = 0
-    for i in range(10_000_000):
-        s += i * i
-    return round(time.perf_counter() - t0, 3)
+USAGE = "usage: python tools/profile_entry.py <reps> <name> [name ...]"
 
 
-def main() -> None:
-    reps = int(sys.argv[1])
-    names = sys.argv[2:]
+def _parse(argv: list[str]) -> tuple[int, list[str]]:
+    if len(argv) < 2 or not argv[0].isdigit() or int(argv[0]) < 1:
+        raise SystemExit(f"{USAGE}\n<reps> must be an integer >= 1 and at "
+                         "least one entry name must follow")
+    unknown = [n for n in argv[1:] if n not in ALL_QUERIES]
+    if unknown:
+        raise SystemExit(f"{USAGE}\nunknown entries: {', '.join(unknown)}")
+    return int(argv[0]), argv[1:]
+
+
+def main(argv: list[str]) -> None:
+    reps, names = _parse(argv)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    import bench  # PRE_REP registry lives there
-
     spark = build_session(app_name="wbl_profile")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
-    p0 = _cpu_probe_s()
+    bench.warm_up(spark, sf_dir)
+    p0 = bench.cpu_probe()
     out: dict[str, dict] = {}
     for name in names:
-        fn = ALL_QUERIES[name].fn
-        times: list[float] = []
-        for _ in range(reps):
-            bench.PRE_REP.get(name, lambda _d: None)(sf_dir)
-            spark.sparkContext.setJobDescription(f"profile:{name}")
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            times.append(round(time.perf_counter() - t0, 3))
+        times = bench.time_reps(spark, sf_dir, name, reps)
         out[name] = {
             "runs": times,
             "median_tail": round(statistics.median(times[1:] or times), 3),
             "min": min(times),
         }
-    p1 = _cpu_probe_s()
+    p1 = bench.cpu_probe()
     print(json.dumps({"probe": [p0, p1], "entries": out,
                       "jvm_args": driver_jvm_args(spark)}))
     spark.stop()
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -51,6 +51,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .artifacts import memoized
 from .text import tokens_expr
 
 #: Words longer than this are dropped from training (vocab hygiene: the
@@ -148,13 +149,7 @@ def apply_merges_expr(syms: Column, merges: list[tuple[str, str]]) -> Column:
     return out
 
 
-#: One-slot memo for the trained state — the `kmeans._PQ_CB_CACHE`
-#: contract: checkpointed frames are session-local (applicationId in the
-#: key), so a registry sweep where several entries read the same trained
-#: tokenizer (merge table, vocab) trains ONCE.
-_BPE_CACHE: dict[tuple, tuple] = {}
-
-
+@memoized("df")
 def bpe_train(
     df: DataFrame,
     n_merges: int = 8,
@@ -172,18 +167,14 @@ def bpe_train(
     Training stops early only if the corpus runs out of pairs (every word
     fused to one symbol) — with the oracle's LEFT JOIN formulation both
     engines then agree on the shorter merge table.
+
+    Pass ``cache_key`` (the corpus identity, e.g. the dataset path) to
+    share the trained state with sibling entries of the same session
+    (:mod:`.artifacts`): a registry sweep where several entries read the
+    same tokenizer (merge table, vocab, token stats) trains ONCE.
     """
     if n_merges < 0:
         raise ValueError(f"need n_merges >= 0; got {n_merges}")
-    key = None
-    if cache_key is not None:
-        key = (
-            df.sparkSession.sparkContext.applicationId,
-            cache_key, n_merges, text_col, max_word_len,
-        )
-        hit = _BPE_CACHE.get(key)
-        if hit is not None:
-            return hit
     words = word_counts(df, text_col, max_word_len).localCheckpoint(eager=True)
     merges: list[tuple[str, str, int]] = []
     for _ in range(n_merges):
@@ -200,11 +191,7 @@ def bpe_train(
         words = words.select(
             "word", "n", merge_scan_expr(F.col("syms"), lhs, rhs).alias("syms")
         ).localCheckpoint(eager=True)
-    out = (merges, words)
-    if key is not None:
-        _BPE_CACHE.clear()
-        _BPE_CACHE[key] = out
-    return out
+    return merges, words
 
 
 def batch_merge_scan_expr(syms: Column, pairs: list[tuple[str, str]]) -> Column:

@@ -55,11 +55,11 @@ Neighbor Search", TPAMI 2011 — subspace codebooks trained independently).
 
 from __future__ import annotations
 
-import threading as _threading
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from .artifacts import memoized
 
 MICRO = 1_000_000  # micro-unit quantization scale (matches pq_topk's ADC)
 
@@ -344,26 +344,7 @@ def train_grouped_codebook(
     )
 
 
-#: One-slot memos for the trained quantizer frames — the
-#: ``similarity._PAIR_CLUSTER_CACHE`` contract: the trained frames sit on
-#: localCheckpointed blocks valid only within the session that built them
-#: (applicationId in the key), so a registry sweep that greets the same
-#: corpus from several entries (the staged codebook/centroid gates and
-#: the recall report) trains ONCE and shares the WORK — results are
-#: deterministic either way, only wall-clock changes.
-#:
-#: Thread-safety (ADVICE r13): ann_recall_report trains from a thread
-#: pool, so dict reads/writes are lock-guarded. The locks cover only the
-#: dict operations, never the training itself — two concurrent MISSES on
-#: the same key may both train (wasted work, identical deterministic
-#: results; the second insert wins), but the one-slot clear-then-insert
-#: can no longer interleave.
-_PQ_CB_CACHE: dict[tuple, DataFrame] = {}
-_PQ_CB_LOCK = _threading.Lock()
-_CENTROID_CACHE: dict[tuple, DataFrame] = {}
-_CENTROID_LOCK = _threading.Lock()
-
-
+@memoized("embeddings")
 def kmeans_pq_codebook(
     embeddings: DataFrame,
     dim: int,
@@ -381,22 +362,16 @@ def kmeans_pq_codebook(
     on the posexploded subvectors — Jégou et al. 2011 trains subspaces
     independently, which grouping by ``sub_id`` expresses exactly).
     Pass ``cache_key`` (the caller-owned input identity, e.g. the dataset
-    path) to memoize the trained frame for sibling queries."""
+    path) to share the trained frame with sibling queries of the same
+    session (:mod:`.artifacts`): a registry sweep that greets the same
+    corpus from several entries (the staged codebook/centroid gates and
+    the recall report) trains ONCE — results are deterministic either
+    way, only wall-clock changes."""
     from .similarity import _pq_sub, _subspaces
 
-    key = None
-    if cache_key is not None:
-        key = (
-            embeddings.sparkSession.sparkContext.applicationId,
-            cache_key, dim, m, n_codes, n_iter, sample_n, id_col, vec_col,
-        )
-        with _PQ_CB_LOCK:
-            hit = _PQ_CB_CACHE.get(key)
-        if hit is not None:
-            return hit
     sub = _pq_sub(dim, m)
     subs = _subspaces(embeddings, "__kid", m, sub, id_col, vec_col)
-    out = train_grouped_codebook(
+    return train_grouped_codebook(
         subs,
         n_codes=n_codes,
         n_iter=n_iter,
@@ -406,13 +381,9 @@ def kmeans_pq_codebook(
         sample_n=sample_n,
         width=sub,
     )
-    if key is not None:
-        with _PQ_CB_LOCK:
-            _PQ_CB_CACHE.clear()
-            _PQ_CB_CACHE[key] = out
-    return out
 
 
+@memoized("embeddings")
 def kmeans_centroids(
     embeddings: DataFrame,
     n_cells: int = 8,
@@ -431,16 +402,6 @@ def kmeans_centroids(
     ``cache_key`` memoizes like :func:`kmeans_pq_codebook`. ``dim`` (the
     statically known vector width) enables the unrolled one-exchange
     Lloyd update — see :func:`train_grouped_codebook`."""
-    key = None
-    if cache_key is not None:
-        key = (
-            embeddings.sparkSession.sparkContext.applicationId,
-            cache_key, n_cells, n_iter, sample_n, id_col, vec_col, dim,
-        )
-        with _CENTROID_LOCK:
-            hit = _CENTROID_CACHE.get(key)
-        if hit is not None:
-            return hit
     single = embeddings.select(
         F.lit(0).alias("__grp"), F.col(id_col), F.col(vec_col)
     )
@@ -457,9 +418,4 @@ def kmeans_centroids(
         single_group=True,
         width=dim,
     )
-    out = cb.select("cell_id", "centroid")
-    if key is not None:
-        with _CENTROID_LOCK:
-            _CENTROID_CACHE.clear()
-            _CENTROID_CACHE[key] = out
-    return out
+    return cb.select("cell_id", "centroid")

@@ -62,12 +62,15 @@ def quantize_sql(col: str, cmin: str, cmax: str, bits: int, div: str) -> str:
     per-file user_id spans of 1.0 — no locality at all). So after
     bucketing, the residual range is scaled back UP by
     ``(2^bits - 1) div bucketed_range`` — exact integer math, product
-    provably < 2^bits, both dimensions contribute high bits."""
-    r = f"(({cmax}) - ({cmin}))"
+    provably < 2^bits, both dimensions contribute high bits. Operands are
+    cast to BIGINT first: an INT column or literal bound would overflow
+    INT in the subtraction once the range passes 2^31."""
+    lo = f"CAST(({cmin}) AS BIGINT)"
+    r = f"(CAST(({cmax}) AS BIGINT) - {lo})"
     width = f"({r} {div} {1 << bits} + 1)"
     rq = f"greatest({r} {div} {width}, 1)"
     scale = f"({(1 << bits) - 1} {div} {rq})"
-    return f"(((({col}) - ({cmin})) {div} {width}) * {scale})"
+    return f"(((CAST(({col}) AS BIGINT) - {lo}) {div} {width}) * {scale})"
 
 
 def zorder_key_frame(

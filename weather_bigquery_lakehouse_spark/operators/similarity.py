@@ -11,9 +11,13 @@ depends on bucket bits / multi-probe), which is the standard trade.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from .artifacts import memoized
 
 SIM_DECIMALS = 6  # round similarities before ranking → engine-portable order
 
@@ -500,19 +504,17 @@ def _validated_codebook(codebook: DataFrame, m: int) -> DataFrame:
     return F.broadcast(cb)
 
 
-#: Attribute set on a broadcast codebook frame whose completeness check
-#: already ran, holding the ``m`` it was checked for — `_as_codebook`
-#: passes such frames through to scorers with that same ``m`` so several
-#: scorers share ONE validation job instead of each re-running the same
-#: distinct-``sub_id`` probe (the report entry consumes one codebook from
-#: five scorers). Plain DataFrames, and frames checked for another ``m``,
-#: are validated per consumer.
-_PREVALIDATED_ATTR = "_wbl_codebook_prevalidated"
+@dataclass(frozen=True)
+class ValidatedCodebook:
+    """A broadcast codebook frame whose completeness check already ran for
+    ``m`` subspaces. The PQ scorers take it as ``codebook`` and, when
+    their own ``m`` matches, skip the check, so several scorers share ONE
+    validation job instead of each re-running the same distinct-``sub_id``
+    probe (the recall report consumes one codebook from five scorers). A
+    scorer with another ``m`` re-validates ``frame`` and raises."""
 
-
-def _mark_prevalidated(cb: DataFrame, m: int) -> DataFrame:
-    setattr(cb, _PREVALIDATED_ATTR, m)
-    return cb
+    frame: DataFrame
+    m: int
 
 
 def pq_codebook_standin(
@@ -522,35 +524,39 @@ def pq_codebook_standin(
     n_codes: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-) -> DataFrame:
+) -> ValidatedCodebook:
     """Public builder for the deterministic stand-in PQ codebook (the
     first-``n_codes``-vectors convention shared by :func:`pq_topk` /
-    :func:`ivfpq_topk` / :func:`pq_distortion`), returned broadcast-ready
-    and marked prevalidated (the builder's completeness count IS the
+    :func:`ivfpq_topk` / :func:`pq_distortion`), returned as a
+    :class:`ValidatedCodebook` (the builder's completeness count IS the
     check). Building it ONCE and passing the result as ``codebook`` lets
     several scorers share one completeness-check job instead of each
     re-counting the same ≤ m·n_codes-row frame."""
-    return _mark_prevalidated(
+    return ValidatedCodebook(
         _pq_codebook(embeddings, m, _pq_sub(dim, m), n_codes, id_col, vec_col), m
     )
 
 
-def validate_codebook(codebook: DataFrame, m: int) -> DataFrame:
+def validate_codebook(
+    codebook: DataFrame | ValidatedCodebook, m: int
+) -> ValidatedCodebook:
     """Public form of the supplied-codebook completeness check: validate
-    ONCE (one small job) and reuse the returned broadcast frame across
-    every scorer that takes a ``codebook`` — instead of each consumer
-    re-running the same distinct-``sub_id`` probe on the same frame."""
-    return _mark_prevalidated(_validated_codebook(codebook, m), m)
+    ONCE (one small job) and reuse the returned value across every scorer
+    that takes a ``codebook`` — instead of each consumer re-running the
+    same distinct-``sub_id`` probe on the same frame."""
+    return ValidatedCodebook(_as_codebook(codebook, m), m)
 
 
-def _as_codebook(codebook: DataFrame, m: int) -> DataFrame:
-    """Normalize the ``codebook`` argument the PQ scorers accept: a frame
-    marked prevalidated for this ``m`` (:func:`pq_codebook_standin` /
-    :func:`validate_codebook`) passes through; any other DataFrame is
+def _as_codebook(codebook: DataFrame | ValidatedCodebook, m: int) -> DataFrame:
+    """Normalize the ``codebook`` argument the PQ scorers accept to a
+    broadcast frame: a :class:`ValidatedCodebook` for this ``m`` passes
+    through; one checked for another ``m``, and any bare DataFrame, is
     validated here (one small job), so a codebook checked for a smaller
     ``m`` raises instead of scoring over a subset of the subspaces."""
-    if getattr(codebook, _PREVALIDATED_ATTR, None) == m:
-        return codebook
+    if isinstance(codebook, ValidatedCodebook):
+        if codebook.m == m:
+            return codebook.frame
+        codebook = codebook.frame
     return _validated_codebook(codebook, m)
 
 
@@ -558,7 +564,7 @@ def pq_encode_cells(
     corpus_cells: DataFrame,
     dim: int,
     m: int,
-    codebook: DataFrame,
+    codebook: DataFrame | ValidatedCodebook,
     id_col: str = "neighbor_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -582,10 +588,11 @@ def pq_encode_cells(
       compares ``__d`` first).
 
     ``corpus_cells`` is :func:`assign_cells` output (id, vec, __norm,
-    cell_id); ``codebook`` as for :func:`pq_topk` (a prevalidated broadcast
-    frame passes through). Scale shape matches the inline encodes: the codebook
-    broadcasts, the argmin map-side combines on (vector, cell, subspace),
-    and only (id, cell, m codes, m distances) rows survive."""
+    cell_id); ``codebook`` as for :func:`pq_topk` (a
+    :class:`ValidatedCodebook` for this ``m`` passes through). Scale shape
+    matches the inline encodes: the codebook broadcasts, the argmin
+    map-side combines on (vector, cell, subspace), and only (id, cell, m
+    codes, m distances) rows survive."""
     sub = _pq_sub(dim, m)
     cb = _as_codebook(codebook, m)
     arr = F.array(*[F.slice(F.col(vec_col), s * sub + 1, sub) for s in range(m)])
@@ -630,7 +637,7 @@ def pq_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    codebook: DataFrame | None = None,
+    codebook: DataFrame | ValidatedCodebook | None = None,
     codes: DataFrame | None = None,
 ) -> DataFrame:
     """Product-quantization ANN top-k with asymmetric distance computation
@@ -663,7 +670,7 @@ def pq_topk(
     broadcast probe tables and reduces with one combinable integer sum
     per (probe, vector). No vector ever crosses a shuffle after encode.
 
-    ``codebook`` may be a prevalidated broadcast frame (see
+    ``codebook`` may be a :class:`ValidatedCodebook` (see
     :func:`pq_codebook_standin` / :func:`validate_codebook`).
     ``codes`` optionally supplies a
     PRECOMPUTED corpus encode — ``(neighbor_id, sub_id, code_id)`` rows
@@ -725,7 +732,7 @@ def pq_distortion(
     n_codes: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    codebook: DataFrame | None = None,
+    codebook: DataFrame | ValidatedCodebook | None = None,
     encoded: DataFrame | None = None,
 ) -> DataFrame:
     """Mean ADC quantization distortion of a PQ codebook over the corpus —
@@ -853,7 +860,7 @@ def ivfpq_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    codebook: DataFrame | None = None,
+    codebook: DataFrame | ValidatedCodebook | None = None,
     centroids: DataFrame | None = None,
     corpus_cells: DataFrame | None = None,
     codes: DataFrame | None = None,
@@ -886,7 +893,7 @@ def ivfpq_topk(
     boundary neighbors, finer codebooks tighten the distance estimate.
 
     Sharing parameters (all assert-equivalence, identical results by
-    construction): ``codebook`` may be a prevalidated broadcast frame
+    construction): ``codebook`` may be a :class:`ValidatedCodebook`
     (:func:`pq_codebook_standin` / :func:`validate_codebook`);
     ``corpus_cells`` a precomputed
     :func:`assign_cells` output over exactly this (``embeddings``,
@@ -988,17 +995,7 @@ def ivfpq_topk(
     )
 
 
-#: One-slot memo for the shared pair+CC stage. The embedding-audit family
-#: (dup clusters, label purity, contrastive mining) consumes the SAME
-#: (pairs, labels) frames; without sharing, one registry sweep pays the
-#: iterative CC latency floor three times (measured 6.5 + 6.0 + 6.8 s at
-#: sf0.1 — round-6 verdict #5). One slot bounds the executor blocks the
-#: cached localCheckpoints hold; the key carries the applicationId so a
-#: new session (whose executors no longer hold the old blocks) can never
-#: resurrect a dead checkpoint.
-_PAIR_CLUSTER_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-
+@memoized("embeddings")
 def embedding_pair_clusters(
     embeddings: DataFrame,
     planes: list[list[float]],
@@ -1011,33 +1008,19 @@ def embedding_pair_clusters(
     near-dup ``pairs`` (localCheckpointed — consumed by CC AND by the
     callers' own rankings) plus their connected-component ``labels``
     (node, comp). Pass ``cache_key`` (the caller-owned identity of the
-    input, e.g. the dataset path) to memoize the checkpointed frames so
-    sibling audits in the same session reuse the WORK, not just the code
-    — results are deterministic either way, only wall-clock changes."""
+    input, e.g. the dataset path) to share the checkpointed frames with
+    sibling audits in the same session (:mod:`.artifacts`), so they reuse
+    the WORK, not just the code: without sharing, one registry sweep pays
+    the iterative CC latency floor once per audit (measured 6.5 + 6.0 +
+    6.8 s at sf0.1). Results are deterministic either way, only
+    wall-clock changes."""
     from .dedup import connected_components
 
-    key = None
-    if cache_key is not None:
-        key = (
-            embeddings.sparkSession.sparkContext.applicationId,
-            cache_key,
-            tuple(tuple(p) for p in planes),
-            threshold,
-            id_col,
-            vec_col,
-        )
-        hit = _PAIR_CLUSTER_CACHE.get(key)
-        if hit is not None:
-            return hit
     pairs = embedding_near_dup_pairs(
         embeddings, planes, threshold, id_col, vec_col
     ).localCheckpoint(eager=True)
     labels = connected_components(pairs, left_col="vec_a", right_col="vec_b")
-    out = (pairs, labels)
-    if key is not None:
-        _PAIR_CLUSTER_CACHE.clear()
-        _PAIR_CLUSTER_CACHE[key] = out
-    return out
+    return pairs, labels
 
 
 def contrastive_pairs(

@@ -1990,10 +1990,11 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-run with k-means codebooks/centroids. Training configs are
     # IDENTICAL to the staged ann_kmeans_codebook / ann_kmeans_centroids
     # gates (centroids train on the md5-ordered sample — the production
-    # shape) and share their one-slot memos via cache_key, so a registry
-    # sweep trains each quantizer once; the staged entries own the cold
-    # build in the bench (PRE_REP purges their memos). cb_t / cent_t were
-    # trained above, overlapped with the ground-truth checkpoints.
+    # shape) and share the session's trained artifacts via cache_key, so a
+    # registry sweep trains each quantizer once; the staged entries run
+    # first and own the cold build in the bench (bench.time_reps). cb_t /
+    # cent_t were trained above, overlapped with the ground-truth
+    # checkpoints.
     methods["ivf_trained"] = (
         "cos",
         sim.ivf_topk(
@@ -2235,7 +2236,7 @@ GROUP BY token
     "of every training word, so one mis-merged word anywhere flips the "
     "gate; one combinable aggregate over the exploded symbol stream "
     "(bounded by chars + merges)",
-    retired=True,  # staged round 8: window full; shares the trained state with bpe_merge_table via the one-slot memo
+    retired=True,  # staged round 8: window full; shares the trained state with bpe_merge_table via operators.artifacts
 )
 def bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, words = _bpe_state(spark, sf_dir)
