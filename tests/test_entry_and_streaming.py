@@ -10,10 +10,7 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
-from weather_bigquery_lakehouse_spark.streaming.ingest import (
-    incremental_zone_ingest,
-    run_hourly_rollup_stream,
-)
+from weather_bigquery_lakehouse_spark.streaming.ingest import run_hourly_rollup_stream
 
 
 def test_entry_smoke(spark):
@@ -179,22 +176,6 @@ def test_watermarked_rollup_drops_late_events(spark, tmp_path):
         "2024-01-01 10:00:00": (2, 3.0),
         "2024-01-01 12:00:00": (1, 4.0),
     }
-
-
-def test_incremental_ingest_processes_each_file_once(spark, tmp_path):
-    src = tmp_path / "zone_src"
-    tgt = str(tmp_path / "zone_tgt")
-    ckpt = str(tmp_path / "zone_ckpt")
-    src.mkdir()
-
-    spark.createDataFrame([(1,)], "id long").write.parquet(str(src / "f1"))
-    incremental_zone_ingest(spark, str(src) + "/*", tgt, ckpt, schema="id long")
-    assert spark.read.parquet(tgt).count() == 1
-
-    spark.createDataFrame([(2,)], "id long").write.parquet(str(src / "f2"))
-    incremental_zone_ingest(spark, str(src) + "/*", tgt, ckpt, schema="id long")
-    got = sorted(r["id"] for r in spark.read.parquet(tgt).collect())
-    assert got == [1, 2]  # f1 not re-processed (exactly-once bookkeeping)
 
 
 def test_incremental_gold_merge_across_runs(spark, tmp_path):

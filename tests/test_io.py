@@ -233,7 +233,7 @@ def test_bigquery_writer_executes_through_fake_datasource(spark, tmp_path):
     assert second["rows"] == [[1, "a"]]
 
 
-def test_parquet_catalog_spec_keeps_local_path(tmp_path):
+def test_parquet_catalog_spec_keeps_local_path(spark, tmp_path):
     from weather_bigquery_lakehouse_spark.io.catalog import GoldCatalog
 
     cat = GoldCatalog(str(tmp_path / "wh"), dataset="gold")
@@ -310,12 +310,21 @@ def test_compact_zone_reduces_files_preserves_rows(spark, tmp_path):
 
 
 def test_compact_zone_skips_already_compact(spark, tmp_path):
+    """A partition with fewer than two under-sized files is left as it is,
+    and the listing alone decides it: no Spark job starts."""
     from weather_bigquery_lakehouse_spark.io.maintenance import compact_zone
 
     zone = str(tmp_path / "zone1")
     spark.range(0, 10).coalesce(1).write.parquet(zone)
-    report = compact_zone(spark, zone)
+    sc = spark.sparkContext
+    sc.setJobGroup("compact-skip", "compact-skip")
+    try:
+        report = compact_zone(spark, zone)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
     assert report.files_before == report.files_after == 1
+    assert report.files_rewritten == report.bins == report.bytes_rewritten == 0
+    assert list(sc.statusTracker().getJobIdsForGroup("compact-skip")) == []
 
 
 def test_expire_partitions_is_metadata_only(spark, tmp_path):
@@ -431,6 +440,53 @@ def test_compact_zone_recovers_torn_swap_before_listing(spark, tmp_path):
     assert spark.read.parquet(zone).count() == 1600
 
 
+def test_optimize_zone_per_hive_partition(spark, tmp_path):
+    """Hive-partitioned zones optimize (compact) one partition dir at a
+    time — partition values live in directory names, and each partition's
+    small files merge only with their own."""
+    from weather_bigquery_lakehouse_spark.io.maintenance import compact_zone
+
+    zone = str(tmp_path / "fact")
+    df = spark.createDataFrame(
+        [(i, f"d{i % 2}") for i in range(100)], "id int, d string"
+    )
+    # two writes per partition → 2 small files in each of d=d0, d=d1
+    for _ in range(2):
+        df.coalesce(1).write.mode("append").partitionBy("d").parquet(zone)
+    m = compact_zone(spark, zone, target_file_bytes=1 << 30)
+    assert m.bins == 2 and m.files_rewritten == 4  # 2 per partition
+    out = spark.read.parquet(zone)
+    assert out.count() == 200
+    assert sorted(r["d"] for r in out.select("d").distinct().collect()) == [
+        "d0",
+        "d1",
+    ]
+
+
+def test_optimize_zone_recovers_torn_swap_before_listing(spark, tmp_path):
+    """A zone left mid-swap by a crashed OPTIMIZE must be restored before
+    planning — otherwise the torn state reads as an empty zone (0-file
+    no-op) or, worse, bins are planned over a partial listing."""
+    from weather_bigquery_lakehouse_spark.io.maintenance import compact_zone
+
+    zone = str(tmp_path / "zone")
+    # crash point: .next fully written, original dir already renamed away
+    spark.range(0, 1600).repartition(8).write.parquet(zone + ".next")
+    m = compact_zone(spark, zone, target_file_bytes=1 << 30)
+    assert m.files_before == 8  # recovered snapshot, then optimized
+    assert m.bins == 1 and m.files_rewritten == 8
+    assert spark.read.parquet(zone).count() == 1600
+    assert not os.path.isdir(zone + ".next")
+
+    # crash point: .next partial (mid-rewrite) with the original intact —
+    # the stale .next must be discarded, never promoted
+    os.makedirs(zone + ".next")
+    m2 = compact_zone(spark, zone, target_file_bytes=1 << 30)
+    assert not os.path.isdir(zone + ".next")
+    assert spark.read.parquet(zone).count() == 1600
+    assert m2.files_rewritten == 0  # one file left: nothing to merge
+
+
 # --------------------------------------------------------------------------
 # Object-store (s3a) readiness — no object store in this container, so the
 # tests pin everything short of the socket: the builder→hadoopConfiguration
@@ -488,7 +544,7 @@ def test_catalog_scheme_uri_goes_through_hadoop_fs(spark, tmp_path):
     from weather_bigquery_lakehouse_spark.io.catalog import GoldCatalog
 
     wh = "file://" + str(tmp_path / "wh")
-    cat = GoldCatalog(wh, dataset="gold", spark=spark)
+    cat = GoldCatalog(wh, dataset="gold")
     assert not cat.table_exists("dim")
     cat.write_table(spark.range(3).toDF("id"), "dim", mode="truncate")
     assert cat.table_exists("dim")
@@ -497,23 +553,27 @@ def test_catalog_scheme_uri_goes_through_hadoop_fs(spark, tmp_path):
     assert not cat.table_exists("dim")
 
 
-def test_catalog_scheme_uri_without_session_refuses_local_fallback(tmp_path):
-    import pytest as _pytest
-
+def test_catalog_scheme_uri_without_session_refuses_local_fallback(
+    spark, tmp_path, monkeypatch
+):
+    """The catalog takes no session argument and has no local fallback:
+    exists/drop on a URI warehouse always go through the Hadoop FS API of
+    the active session. A scheme no FileSystem serves (no bucket or jar
+    needed to show it) fails loudly instead of answering from the local
+    disk, and nothing lands under the working directory."""
     from weather_bigquery_lakehouse_spark.io.catalog import GoldCatalog
 
-    cat = GoldCatalog(str(tmp_path / "local_wh"))  # local path: fine without spark
+    monkeypatch.chdir(tmp_path)
+    cat = GoldCatalog(str(tmp_path / "local_wh"))
     assert not cat.table_exists("t")
-    cat_uri = GoldCatalog.__new__(GoldCatalog)
-    cat_uri.warehouse_dir = "s3a://bucket/wh"
-    cat_uri.dataset = "gold"
-    cat_uri.fmt = "parquet"
-    cat_uri.options = {}
-    cat_uri._spark = None
-    with _pytest.raises(ValueError, match="Hadoop FS"):
+    with pytest.raises(Exception, match="nofs"):
+        GoldCatalog("nofs://bucket/wh")  # CREATE DATASET goes through Hadoop FS too
+    cat_uri = GoldCatalog("nofs://bucket/wh", fmt="bigquery")  # no dataset mkdir
+    with pytest.raises(Exception, match="nofs"):
         cat_uri.table_exists("t")
-    with _pytest.raises(ValueError, match="Hadoop FS"):
+    with pytest.raises(Exception, match="nofs"):
         cat_uri.drop_table("t")
+    assert sorted(os.listdir(tmp_path)) == ["local_wh"]
 
 
 def test_catalog_specs_assemble_s3a_paths(spark):
@@ -965,9 +1025,7 @@ def test_snapshot_diff_entry_is_idempotent_across_sweeps(spark, sf_dir):
 def test_compaction_bins_plan_semantics(spark):
     """The OPTIMIZE planner on a hand fixture: compliant files keep with
     NULL bin, under-sized files bin-pack per partition by running total
-    (bin = cum_before div target), and target < 2*min raises."""
-    import pytest
-
+    (bin = cum_before div target); the compliance floor is target // 2."""
     from weather_bigquery_lakehouse_spark.io.maintenance import compaction_bins
 
     rows = [
@@ -982,9 +1040,7 @@ def test_compaction_bins_plan_semantics(spark):
     df = spark.createDataFrame(rows, "part string, path string, size_bytes long")
     got = {
         (r["part"], r["path"]): (r["action"], r["bin_id"])
-        for r in compaction_bins(
-            df, target_bytes=800, min_file_bytes=400, partition_cols=["part"]
-        ).collect()
+        for r in compaction_bins(df, target_bytes=800, partition_cols=["part"]).collect()
     }
     assert got == {
         ("p1", "a"): ("rewrite", 0),
@@ -994,11 +1050,9 @@ def test_compaction_bins_plan_semantics(spark):
         ("p1", "big"): ("keep", None),
         ("p2", "x"): ("rewrite", 0),
     }
-    with pytest.raises(ValueError, match="2 \\* min_file_bytes"):
-        compaction_bins(df, target_bytes=500, min_file_bytes=400)
 
 
-def test_optimize_zone_rewrites_small_keeps_large_untouched_idempotent(
+def test_compact_zone_rewrites_small_keeps_large_untouched_idempotent(
     spark, tmp_path
 ):
     """The executor contract: under-sized files merge per plan bin,
@@ -1007,7 +1061,7 @@ def test_optimize_zone_rewrites_small_keeps_large_untouched_idempotent(
     structural no-op."""
     import os
 
-    from weather_bigquery_lakehouse_spark.io.maintenance import optimize_zone
+    from weather_bigquery_lakehouse_spark.io.maintenance import compact_zone
 
     zone = str(tmp_path / "zone")
     os.makedirs(zone)
@@ -1025,9 +1079,7 @@ def test_optimize_zone_rewrites_small_keeps_large_untouched_idempotent(
     big_inode = os.stat(os.path.join(zone, big)).st_ino
     before_sum = spark.read.parquet(zone).groupBy().sum("id").first()[0]
 
-    m = optimize_zone(
-        spark, zone, target_file_bytes=2 * sizes[big], min_file_bytes=sizes[big]
-    )
+    m = compact_zone(spark, zone, target_file_bytes=2 * sizes[big])
     assert m.files_before == 7
     assert m.files_kept == 1 and m.files_rewritten == 6
     assert m.bins >= 1 and m.files_after == m.files_kept + m.bins
@@ -1046,9 +1098,7 @@ def test_optimize_zone_rewrites_small_keeps_large_untouched_idempotent(
         for f in os.listdir(zone)
         if f.endswith(".parquet")
     }
-    m2 = optimize_zone(
-        spark, zone, target_file_bytes=2 * sizes[big], min_file_bytes=sizes[big]
-    )
+    m2 = compact_zone(spark, zone, target_file_bytes=2 * sizes[big])
     assert m2.files_rewritten == 0 and m2.bins == 0 and m2.bytes_rewritten == 0
     assert m2.files_before == m2.files_after == m.files_after
     got = {
@@ -1057,54 +1107,3 @@ def test_optimize_zone_rewrites_small_keeps_large_untouched_idempotent(
         if f.endswith(".parquet")
     }
     assert got == inodes
-
-
-def test_optimize_zone_per_hive_partition(spark, tmp_path):
-    """Hive-partitioned zones optimize one partition dir at a time —
-    partition values live in directory names, and each partition's small
-    files merge only with their own."""
-    import os
-
-    from weather_bigquery_lakehouse_spark.io.maintenance import optimize_zone
-
-    zone = str(tmp_path / "fact")
-    df = spark.createDataFrame(
-        [(i, f"d{i % 2}") for i in range(100)], "id int, d string"
-    )
-    # two writes per partition → 2 small files in each of d=d0, d=d1
-    for _ in range(2):
-        df.coalesce(1).write.mode("append").partitionBy("d").parquet(zone)
-    m = optimize_zone(spark, zone, target_file_bytes=1 << 30, min_file_bytes=1 << 29)
-    assert m.bins == 2 and m.files_rewritten == 4  # 2 per partition
-    out = spark.read.parquet(zone)
-    assert out.count() == 200
-    assert sorted(r["d"] for r in out.select("d").distinct().collect()) == [
-        "d0",
-        "d1",
-    ]
-
-
-def test_optimize_zone_recovers_torn_swap_before_listing(spark, tmp_path):
-    """A zone left mid-swap by a crashed OPTIMIZE must be restored before
-    planning — otherwise the torn state reads as an empty zone (0-file
-    no-op) or, worse, bins are planned over a partial listing."""
-    import os
-
-    from weather_bigquery_lakehouse_spark.io.maintenance import optimize_zone
-
-    zone = str(tmp_path / "zone")
-    # crash point: .next fully written, original dir already renamed away
-    spark.range(0, 1600).repartition(8).write.parquet(zone + ".next")
-    m = optimize_zone(spark, zone, target_file_bytes=1 << 30, min_file_bytes=1 << 29)
-    assert m.files_before == 8  # recovered snapshot, then optimized
-    assert m.bins == 1 and m.files_rewritten == 8
-    assert spark.read.parquet(zone).count() == 1600
-    assert not os.path.isdir(zone + ".next")
-
-    # crash point: .next partial (mid-rewrite) with the original intact —
-    # the stale .next must be discarded, never promoted
-    os.makedirs(zone + ".next")
-    m2 = optimize_zone(spark, zone, target_file_bytes=1 << 30, min_file_bytes=1)
-    assert not os.path.isdir(zone + ".next")
-    assert spark.read.parquet(zone).count() == 1600
-    assert m2.files_rewritten == 0  # everything compliant at min=1

@@ -18,6 +18,17 @@ from weather_bigquery_lakehouse_spark.pipeline.sources import (
 )
 
 
+GOLD_TABLES = (
+    "dim_city", "dim_update_date", "dim_forecast_date", "dim_weather_condition",
+    "fact_weather",
+)
+
+
+def _gold(spark, result) -> dict:
+    """The run's five gold tables, read through the catalog it returns."""
+    return {name: result["catalog"].read_table(spark, name) for name in GOLD_TABLES}
+
+
 @pytest.fixture(scope="module")
 def result(spark, tmp_path_factory):
     base = tmp_path_factory.mktemp("lakehouse")
@@ -31,8 +42,8 @@ def result(spark, tmp_path_factory):
     )
 
 
-def test_gold_tables_exist(result):
-    t = result["tables"]
+def test_gold_tables_exist(result, spark):
+    t = _gold(spark, result)
     assert t["dim_city"].count() > 0
     assert t["dim_update_date"].count() >= 1
     assert t["dim_forecast_date"].count() == 6  # 6-day horizon
@@ -43,7 +54,7 @@ def test_gold_tables_exist(result):
 def test_fact_joins_every_dim_losslessly(result, spark):
     """The recomputed-FK contract: fact ⋈ each dim on the surrogate key
     keeps every fact row (reference invariant, silver_to_gold.py:158-166)."""
-    t = result["tables"]
+    t = _gold(spark, result)
     fact = t["fact_weather"]
     n = fact.count()
     assert fact.join(t["dim_city"], "id_city").count() == n
@@ -52,23 +63,23 @@ def test_fact_joins_every_dim_losslessly(result, spark):
     assert fact.join(t["dim_update_date"], "id_update_date").count() == n
 
 
-def test_key_format_is_sha256_hex(result):
-    row = result["tables"]["dim_city"].first()
+def test_key_format_is_sha256_hex(result, spark):
+    row = _gold(spark, result)["dim_city"].first()
     assert len(row["id_city"]) == 64
     int(row["id_city"], 16)  # parses as hex
 
 
-def test_mixed_date_formats_collapsed(result):
+def test_mixed_date_formats_collapsed(result, spark):
     """All three atualizado_em formats must parse to the same date."""
     dates = [
         r["atualizado_em"]
-        for r in result["tables"]["dim_update_date"].collect()
+        for r in _gold(spark, result)["dim_update_date"].collect()
     ]
     assert [str(d) for d in dates] == ["2024-03-25"]
 
 
-def test_cleaning_removed_whitespace_and_dups(result):
-    cities = result["tables"]["dim_city"]
+def test_cleaning_removed_whitespace_and_dups(result, spark):
+    cities = _gold(spark, result)["dim_city"]
     names = [r["nome"] for r in cities.collect()]
     assert all(n == n.strip() for n in names)
     assert len(names) == len(set(names))
@@ -85,9 +96,9 @@ def test_fact_append_is_idempotent(spark, tmp_path):
         run_date="2024-03-25",
     )
     first = run_pipeline(spark, **kwargs)
-    n1 = first["tables"]["fact_weather"].count()
+    n1 = first["catalog"].read_table(spark, "fact_weather").count()
     second = run_pipeline(spark, **kwargs)
-    n2 = second["tables"]["fact_weather"].count()
+    n2 = second["catalog"].read_table(spark, "fact_weather").count()
     assert n1 == n2 > 0
 
 
@@ -231,6 +242,53 @@ def test_day_two_silver_touches_only_its_partition(spark, two_days):
         q = spark.read.parquet(str(zone / "silver" / "_quality" / entity))
         got = [r["rows_in"] for r in q.where(F.col("_processing_date") == DAYS[1]).collect()]
         assert got == [expected, expected], entity
+
+
+def test_silver_quality_writes_one_file_per_run(spark, tmp_path):
+    """Each silver run appends its 1-row `_quality` report as one parquet
+    file, not that file plus an empty one."""
+    from weather_bigquery_lakehouse_spark.pipeline.runner import execute_stage
+
+    zone, wh = tmp_path / "zones", str(tmp_path / "warehouse")
+    for date in DAYS:
+        records = dict(
+            city_records=fixture_city_rows(5),
+            forecast_records=fixture_forecast_rows(5, ingestion_date=date),
+        )
+        for task in ("bronze_ingest_cities", "bronze_ingest_weather", "silver_transform"):
+            execute_stage(spark, task, str(zone), wh, run_date=date, **records)
+    for entity in SILVER_ENTITIES:
+        quality = zone / "silver" / "_quality" / entity
+        assert len(list(quality.glob("*.parquet"))) == 2, entity
+
+
+def test_uri_warehouse_runs_pipeline_and_maintenance(spark, tmp_path, monkeypatch):
+    """A warehouse given as a URI (file:// here; s3a:// takes the same
+    Hadoop FS path) runs two days and maintenance: the gold keys stay
+    unique, and nothing lands under the working directory."""
+    from weather_bigquery_lakehouse_spark.pipeline.runner import run_maintenance
+
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    zone = str(tmp_path / "zones")
+    wh = "file://" + str(tmp_path / "warehouse")
+    cities = fixture_city_rows(10)
+    for date in DAYS:
+        forecasts = fixture_forecast_rows(10, ingestion_date=date)
+        out = run_pipeline(spark, zone, wh, cities, forecasts, date)
+        assert "gold_load" in out["executed"]
+    reports = run_maintenance(spark, zone, keep_dates=list(DAYS))
+    assert any(k.endswith(":compaction") for k in reports)
+    cat = out["catalog"]
+    fact = cat.read_table(spark, "fact_weather")
+    dates = {str(r[0]) for r in fact.select("_ingestion_date").distinct().collect()}
+    assert dates == set(DAYS)
+    assert fact.groupBy("id_fact", "_ingestion_date").count().where("count > 1").count() == 0
+    dim_city = cat.read_table(spark, "dim_city")
+    assert dim_city.groupBy("id_city").count().where("count > 1").count() == 0
+    assert fact.join(dim_city, "id_city").count() == fact.count() > 0
+    assert list(cwd.iterdir()) == []
 
 
 def _jobs_started(spark, fn) -> int:
@@ -544,7 +602,7 @@ def test_execute_stage_per_task_equals_in_process_pipeline(spark, tmp_path):
             city_records=cities, forecast_records=forecasts,
         )
     cat = GoldCatalog(wh)
-    for name, df in ref["tables"].items():
+    for name, df in _gold(spark, ref).items():
         got = cat.read_table(spark, name)
         assert sorted(map(tuple, got.collect())) == sorted(
             map(tuple, df.collect())
@@ -614,7 +672,7 @@ def test_bronze_only_partial_dag_runs(spark, tmp_path):
         run_date="2024-03-25", dag=dag,
     )
     assert out["executed"] == ["bronze_ingest_cities"]
-    assert out["tables"] is None and out["catalog"] is None
+    assert out["catalog"] is None
 
 
 def test_render_rejects_non_identifier_ids():

@@ -451,6 +451,33 @@ def test_plan_lint_bans_monotonically_increasing_id(spark):
     assert "monotonically_increasing_id" in hits
 
 
+def test_capture_plans_masks_session_ids():
+    """Captured plans mask the ids Spark numbers per session, so two
+    captures of one plan compare byte-equal."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from tools.capture_plans import mask_ids
+
+    first = (
+        "(3) Project [codegen id : 1]\n"
+        "Output [2]: [vec_id#0L, __bucket#1289]\n"
+        "Input [2]: [vec_id#0L, embedding#1]\n"
+        "(4) Scan ExistingRDD\n"
+        "Arguments: [x#12], MapPartitionsRDD[273] at applySchemaToPythonRDD, "
+        "[plan_id=6409]\n"
+    )
+    second = (
+        first.replace("#1289", "#2044").replace("#12]", "#37]")
+        .replace("RDD[273]", "RDD[274]").replace("6409", "71")
+    )
+    assert first != second
+    assert mask_ids(first) == mask_ids(second)
+    assert "vec_id#<n>L" in mask_ids(first)
+    assert "MapPartitionsRDD[<n>]" in mask_ids(first)
+
+
 def test_incremental_lsh_persisted_base_never_reshingled(spark, sf_dir, tmp_path):
     """The warehouse contract of the dedup_incremental_lsh driver row:
     with base_signatures= passed (the entry lands + reads the parquet),

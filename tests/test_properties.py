@@ -676,8 +676,7 @@ def test_compaction_bins_invariants_on_arbitrary_inventories(
         return
     df = spark.createDataFrame(rows, "part string, path string, size_bytes long")
     plan = compaction_bins(
-        df, target_bytes=target, min_file_bytes=min_bytes,
-        partition_cols=["part"],
+        df, target_bytes=target, partition_cols=["part"],
     ).collect()
     assert sorted((r["part"], r["path"]) for r in plan) == sorted(
         (p, f) for p, f, _ in rows
@@ -724,8 +723,7 @@ def test_compaction_bins_invariants_on_arbitrary_inventories(
         merged_rows, "part string, path string, size_bytes long"
     )
     plan2 = compaction_bins(
-        df2, target_bytes=target, min_file_bytes=min_bytes,
-        partition_cols=["part"],
+        df2, target_bytes=target, partition_cols=["part"],
     ).collect()
     rewrite_bins2 = Counter()
     for r in plan2:

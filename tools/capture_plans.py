@@ -8,18 +8,28 @@ against committed plans/r13/<name>_{before,after}.txt files.
 Defaults: sf dir from $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1);
 names default to every ALL_QUERIES entry. Entries whose construction
 executes work (streaming replays, sink round-trips) still produce a plan
-of the returned frame.
+of the returned frame. Expression, RDD and exchange plan ids are written
+masked (``#<n>``, ``RDD[<n>]``, ``plan_id=<n>``), so two captures of one
+plan are byte-equal.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from weather_bigquery_lakehouse_spark.session import build_session
 from weather_bigquery_lakehouse_spark.plans import ALL_QUERIES
+
+
+def mask_ids(plan: str) -> str:
+    """Mask the ids Spark numbers per session (``#1001`` expression ids,
+    ``RDD[273]`` ids, exchange ``plan_id=6409``) so two captures of the
+    same plan compare equal."""
+    return re.sub(r"(#|RDD\[|plan_id=)\d+", r"\1<n>", plan)
 
 
 def main() -> None:
@@ -47,7 +57,7 @@ def main() -> None:
         except Exception as exc:  # noqa: BLE001 — record the failure, keep sweeping
             plan = f"PLAN CAPTURE FAILED: {type(exc).__name__}: {exc}\n"
         with open(path, "w") as f:
-            f.write(plan)
+            f.write(mask_ids(plan))
         print(f"wrote {path}", flush=True)
     spark.stop()
 

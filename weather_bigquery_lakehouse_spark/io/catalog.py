@@ -26,7 +26,6 @@ All reads/writes stay on executors in both modes.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -57,26 +56,16 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return fs, hadoop_path
 
 
-def fs_exists(spark: SparkSession, path: str) -> bool:
-    """Scheme-dispatched existence probe (works for s3a://, unlike
-    ``os.path``)."""
-    fs, hadoop_path = _hadoop_fs(spark, path)
-    return bool(fs.exists(hadoop_path))
-
-
-def fs_delete(spark: SparkSession, path: str) -> bool:
-    """Scheme-dispatched recursive delete; True when something was
-    removed."""
-    fs, hadoop_path = _hadoop_fs(spark, path)
-    return bool(fs.delete(hadoop_path, True))
-
-
 class GoldCatalog:
     """Dataset of named gold tables behind a format switch.
 
     ``options`` carries connector settings (e.g. ``project``,
     ``temporaryGcsBucket``, ``writeMethod`` for the BigQuery connector);
     they are applied to every reader/writer this catalog assembles.
+
+    Dataset creation, ``table_exists`` and ``drop_table`` go through the
+    Hadoop FS API of the active session, so a ``file://``, ``s3a://`` or
+    ``hdfs://`` warehouse behaves like a local path.
     """
 
     def __init__(
@@ -85,24 +74,16 @@ class GoldCatalog:
         dataset: str = "gold",
         fmt: str = "parquet",
         options: dict[str, str] | None = None,
-        spark: SparkSession | None = None,
     ):
         self.warehouse_dir = warehouse_dir
         self.dataset = dataset
         self.fmt = fmt
         self.options = dict(options or {})
-        # kept for scheme-aware exists/drop: an s3a:// or hdfs:// warehouse
-        # must go through the Hadoop FS API, never os.path/shutil
-        self._spark = spark
         if fmt != "bigquery":
             # CREATE DATASET IF NOT EXISTS (reference bigquery.py:7-17).
-            # Hadoop-FS mkdirs when a session is available (works for s3a);
-            # plain mkdir otherwise. BigQuery datasets are created by the
-            # connector/warehouse, not a filesystem.
-            if spark is not None:
-                ensure_dir(spark, self._dataset_path())
-            else:
-                os.makedirs(self._dataset_path(), exist_ok=True)
+            # BigQuery datasets are created by the connector/warehouse,
+            # not a filesystem.
+            ensure_dir(SparkSession.active(), self._dataset_path())
 
     def _dataset_path(self) -> str:
         return os.path.join(self.warehouse_dir, self.dataset)
@@ -110,31 +91,13 @@ class GoldCatalog:
     def _table_path(self, table: str) -> str:
         return os.path.join(self._dataset_path(), table)
 
-    def _has_scheme(self) -> bool:
-        return "://" in self.warehouse_dir
-
     def table_exists(self, table: str) -> bool:
-        if self._spark is not None:
-            return fs_exists(self._spark, self._table_path(table))
-        if self._has_scheme():
-            raise ValueError(
-                f"warehouse {self.warehouse_dir!r} has a URI scheme — "
-                "construct GoldCatalog with spark= so exists/drop go "
-                "through the Hadoop FS API"
-            )
-        return os.path.isdir(self._table_path(table))
+        fs, path = _hadoop_fs(SparkSession.active(), self._table_path(table))
+        return bool(fs.exists(path))
 
     def drop_table(self, table: str) -> None:
-        if self._spark is not None:
-            fs_delete(self._spark, self._table_path(table))
-            return
-        if self._has_scheme():
-            raise ValueError(
-                f"warehouse {self.warehouse_dir!r} has a URI scheme — "
-                "construct GoldCatalog with spark= so exists/drop go "
-                "through the Hadoop FS API"
-            )
-        shutil.rmtree(self._table_path(table), ignore_errors=True)
+        fs, path = _hadoop_fs(SparkSession.active(), self._table_path(table))
+        fs.delete(path, True)
 
     # -- plan assembly (exposed so tests can assert it without a network) --
 

@@ -16,12 +16,11 @@ aggregate — no data movement when the guard says "fresh".
 from __future__ import annotations
 
 import datetime as dt
-import os
-from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .catalog import _hadoop_fs
 from .writers import write_table
 
 
@@ -32,9 +31,7 @@ def _sink_mtime(spark: SparkSession, path: str) -> dt.datetime | None:
     s3a:// (→ HEAD object under the hood) and hdfs:// — the Spark-native
     equivalent of the reference's boto3 ``head_object``
     (src/etl/utils/bucket.py:111-116)."""
-    sc = spark.sparkContext
-    hadoop_path = sc._jvm.org.apache.hadoop.fs.Path(path)  # type: ignore[attr-defined]
-    fs = hadoop_path.getFileSystem(sc._jsc.hadoopConfiguration())  # type: ignore[attr-defined]
+    fs, hadoop_path = _hadoop_fs(spark, path)
     if not fs.exists(hadoop_path):
         return None
     status = fs.getFileStatus(hadoop_path)

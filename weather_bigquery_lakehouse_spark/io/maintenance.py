@@ -11,19 +11,11 @@ standard nightly fixes.
 
 from __future__ import annotations
 
-import math
 import os
 import shutil
-from dataclasses import dataclass
+from dataclasses import astuple, dataclass
 
 from pyspark.sql import SparkSession
-
-
-@dataclass(frozen=True)
-class CompactionReport:
-    files_before: int
-    files_after: int
-    bytes_total: int
 
 
 def recover_swap(path: str) -> str:
@@ -259,64 +251,9 @@ def _list_files(path: str, suffix: str = ".parquet") -> list[str]:
     return out
 
 
-def compact_zone(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    min_files: int = 2,
-) -> CompactionReport:
-    """Rewrite a parquet zone into ~``target_file_bytes`` files.
-
-    The file count comes from the zone's actual byte size (ceil(bytes /
-    target)), the rewrite is a ``repartition`` (round-robin — even output
-    sizes, no skew from the input layout), and the swap is
-    write-to-``.next`` + rename, the same crash-safe pattern as the
-    streaming gold MERGE. Local-filesystem rename here; on an object
-    store the swap step is the table format's (Delta/Iceberg) commit.
-
-    Skips zones already at or below ``min_files`` — compaction that
-    rewrites one file into one file is pure write amplification.
-
-    Hive-partitioned zones (``col=value`` subdirectories) compact one
-    partition directory at a time: partition values live in the directory
-    names, not the files, so a whole-zone rewrite would flatten the
-    layout. Per-partition compaction also keeps each rewrite's blast
-    radius to one partition — at scale that's what makes compaction
-    schedulable alongside live readers.
-    """
-    part_dirs = sorted(
-        os.path.join(path, e)
-        for e in (os.listdir(path) if os.path.isdir(path) else [])
-        if "=" in e and os.path.isdir(os.path.join(path, e))
-    )
-    if part_dirs:
-        before = after = total = 0
-        for d in part_dirs:
-            r = compact_zone(spark, d, target_file_bytes, min_files)
-            before += r.files_before
-            after += r.files_after
-            total += r.bytes_total
-        return CompactionReport(before, after, total)
-    # a crash in a previous run may have left the zone mid-swap: restore
-    # the surviving snapshot before listing (otherwise a torn swap reads
-    # as an empty zone and is silently reported as 0 files)
-    recover_swap(path)
-    files = _list_files(path)
-    total = sum(os.path.getsize(f) for f in files)
-    if len(files) <= min_files:
-        return CompactionReport(len(files), len(files), total)
-    n_out = max(1, math.ceil(total / target_file_bytes))
-    if n_out >= len(files):
-        return CompactionReport(len(files), len(files), total)
-    df = spark.read.parquet(path)
-    df.repartition(n_out).write.mode("overwrite").parquet(path.rstrip("/") + ".next")
-    commit_swap(path)
-    return CompactionReport(len(files), len(_list_files(path)), total)
-
-
 @dataclass(frozen=True)
-class OptimizeManifest:
-    """What an OPTIMIZE run did: the audit row a table-maintenance job
+class CompactionReport:
+    """What a compaction run did: the audit row a table-maintenance job
     logs. ``files_kept`` were NOT rewritten (same bytes, same inode
     locally); only ``bytes_rewritten`` moved."""
 
@@ -331,7 +268,6 @@ class OptimizeManifest:
 def compaction_bins(
     files,
     target_bytes: int,
-    min_file_bytes: int,
     partition_cols: list[str] | None = None,
     path_col: str = "path",
     size_col: str = "size_bytes",
@@ -340,48 +276,40 @@ def compaction_bins(
     the decision half of small-file compaction, split out so it is a pure
     function of (path, size) rows and therefore oracle-checkable.
 
-    Files at or above ``min_file_bytes`` are COMPLIANT: action ``keep``,
-    ``bin_id`` NULL — an OPTIMIZE that rewrites already-right-sized files
-    is pure write amplification. Under-sized files bin-pack per partition
-    by running-total: ordered by path (any deterministic total order
-    works; path is unique), ``bin_id = (cum_before) div target`` where
-    ``cum_before`` is the running size sum exclusive of the current file.
-    A bin closes when the running total crosses a multiple of
-    ``target_bytes``, so every non-final bin per partition totals more
-    than ``target_bytes − min_file_bytes``.
-
-    ``target_bytes >= 2 * min_file_bytes`` is REQUIRED (raises): it makes
-    every non-final bin's total ≥ ``min_file_bytes``, i.e. every merged
-    output except possibly the last per partition is compliant — which is
-    what makes a second OPTIMIZE run a structural no-op (at most one
-    undersized output can remain per partition, and a 1-file bin is never
-    rewritten).
+    Files at or above ``target_bytes // 2`` are COMPLIANT: action
+    ``keep``, ``bin_id`` NULL — an OPTIMIZE that rewrites already-right-
+    sized files is pure write amplification. Under-sized files bin-pack
+    per partition by running-total: ordered by path (any deterministic
+    total order works; path is unique), ``bin_id = (cum_before) div
+    target`` where ``cum_before`` is the running size sum exclusive of the
+    current file. A bin closes when the running total crosses a multiple
+    of ``target_bytes``, so every non-final bin per partition totals more
+    than ``target_bytes − target_bytes // 2``, itself at least the
+    compliance floor: every merged output except possibly the last per
+    partition is compliant — which is what makes a second OPTIMIZE run a
+    structural no-op (at most one undersized output can remain per
+    partition, and a 1-file bin is never rewritten).
 
     Scale shape: the input is FILE METADATA (one row per file — ~800k
     rows for 100 TB at 128 MB files), the one window partitions by the
     table partition columns (the unit a real OPTIMIZE schedules by), and
     the output is consumed either by the executor or a manifest sink. No
     data-scale shuffle anywhere; the data files themselves move only in
-    :func:`optimize_zone`.
+    :func:`compact_zone`.
 
     Output: partition_cols… + (path, size_bytes, action, bin_id).
     """
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    if target_bytes < 2 * min_file_bytes:
-        raise ValueError(
-            f"target_bytes ({target_bytes}) must be >= 2 * min_file_bytes "
-            f"({min_file_bytes}) — otherwise a merged bin can come out "
-            "under-sized and OPTIMIZE would not be idempotent"
-        )
+    min_bytes = target_bytes // 2
     parts = partition_cols or []
     base = files.select(
         *parts,
         F.col(path_col).alias("path"),
         F.col(size_col).cast("bigint").alias("size_bytes"),
     )
-    kept = base.where(F.col("size_bytes") >= min_file_bytes).select(
+    kept = base.where(F.col("size_bytes") >= min_bytes).select(
         *parts,
         "path",
         "size_bytes",
@@ -394,7 +322,7 @@ def compaction_bins(
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     small = (
-        base.where(F.col("size_bytes") < min_file_bytes)
+        base.where(F.col("size_bytes") < min_bytes)
         .withColumn("__cum", F.sum("size_bytes").over(w))
         .select(
             *parts,
@@ -409,63 +337,59 @@ def compaction_bins(
     return kept.unionByName(small)
 
 
-def optimize_zone(
+def compact_zone(
     spark: SparkSession,
     path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
-    min_file_bytes: int | None = None,
-) -> OptimizeManifest:
-    """OPTIMIZE (bin-packing small-file compaction) for a parquet zone —
-    the selective counterpart of :func:`compact_zone`: compliant files
-    are NEVER read or re-encoded (they move into the new snapshot as
-    hardlinks — same inode, zero data bytes touched), only under-sized
-    files are merged, one output file per plan bin, and the whole change
-    commits through the crash-safe ``.next`` swap (on an object store
-    this commit is the table format's — Delta/Iceberg — snapshot swap).
+) -> CompactionReport:
+    """OPTIMIZE (bin-packing small-file compaction) for a parquet zone.
+
+    Files at or above ``target_file_bytes // 2`` are NEVER read or
+    re-encoded: they move into the new snapshot as hardlinks (same inode,
+    zero data bytes touched). Under-sized files are merged, one output
+    file per plan bin of two or more files, and the whole change commits
+    through the crash-safe ``.next`` swap (on an object store this commit
+    is the table format's — Delta/Iceberg — snapshot swap).
 
     Bins come from :func:`compaction_bins` (the oracle-checked planner)
     over the zone's real file listing; 1-file bins are skipped (rewriting
-    one file into one file is write amplification), which together with
-    the planner's ``target >= 2·min`` contract makes a second run a
-    structural no-op: after a run, at most one under-sized file can
-    remain per partition, and it sits alone in its bin.
+    one file into one file is write amplification), which with the
+    planner's compliance floor makes a second run a structural no-op:
+    after a run, at most one under-sized file can remain per partition,
+    and it sits alone in its bin. A partition with fewer than two
+    under-sized files returns before any Spark job.
 
-    Hive-partitioned zones (``col=value`` subdirectories) optimize one
-    partition directory at a time, same as :func:`compact_zone` — the
-    blast radius a real scheduler wants.
+    Hive-partitioned zones (``col=value`` subdirectories) compact one
+    partition directory at a time: partition values live in the directory
+    names, not the files, so a whole-zone rewrite would flatten the
+    layout, and one partition is the blast radius a scheduler running
+    compaction alongside live readers wants.
     """
-    if min_file_bytes is None:
-        min_file_bytes = target_file_bytes // 2
     part_dirs = sorted(
         os.path.join(path, e)
         for e in (os.listdir(path) if os.path.isdir(path) else [])
         if "=" in e and os.path.isdir(os.path.join(path, e))
     )
     if part_dirs:
-        totals = [0] * 6
-        for d in part_dirs:
-            m = optimize_zone(spark, d, target_file_bytes, min_file_bytes)
-            for i, v in enumerate(
-                (m.files_before, m.files_after, m.files_kept,
-                 m.files_rewritten, m.bins, m.bytes_rewritten)
-            ):
-                totals[i] += v
-        return OptimizeManifest(*totals)
+        reports = [astuple(compact_zone(spark, d, target_file_bytes)) for d in part_dirs]
+        return CompactionReport(*map(sum, zip(*reports)))
+    # a crash in a previous run may have left the zone mid-swap: restore
+    # the surviving snapshot before listing (otherwise a torn swap reads
+    # as an empty zone and is silently reported as 0 files)
     recover_swap(path)
     path = path.rstrip("/")
     listing = [(f, os.path.getsize(f)) for f in sorted(_list_files(path))]
-    if not listing:
-        return OptimizeManifest(0, 0, 0, 0, 0, 0)
-    inv = spark.createDataFrame(listing, "path string, size_bytes long")
+    n = len(listing)
+    if sum(size < target_file_bytes // 2 for _, size in listing) < 2:
+        return CompactionReport(n, n, n, 0, 0, 0)
+    from pyspark.sql import functions as F
+
     # constant partition key: this zone level IS one planning partition
     # (file metadata, bounded), and an explicitly-keyed window avoids the
     # move-everything-to-one-partition warning an empty partitionBy emits
-    from pyspark.sql import functions as F
-
+    inv = spark.createDataFrame(listing, "path string, size_bytes long")
     inv = inv.withColumn("__zone", F.lit(0))
-    plan = compaction_bins(
-        inv, target_file_bytes, min_file_bytes, partition_cols=["__zone"]
-    ).collect()
+    plan = compaction_bins(inv, target_file_bytes, partition_cols=["__zone"]).collect()
     bins: dict[int, list[tuple[str, int]]] = {}
     kept = []
     for r in plan:
@@ -474,14 +398,10 @@ def optimize_zone(
         else:
             bins.setdefault(r["bin_id"], []).append((r["path"], r["size_bytes"]))
     real_bins = {b: fs for b, fs in bins.items() if len(fs) >= 2}
-    skipped = [fs[0][0] for b, fs in bins.items() if len(fs) < 2]
-    if not real_bins:
-        return OptimizeManifest(
-            len(listing), len(listing), len(listing), 0, 0, 0
-        )
+    kept += [fs[0][0] for fs in bins.values() if len(fs) < 2]
     nxt = path + ".next"
     os.makedirs(nxt)
-    for f in kept + skipped:  # zero-copy carry-over: hardlink, same inode
+    for f in kept:  # zero-copy carry-over: hardlink, same inode
         try:
             os.link(f, os.path.join(nxt, os.path.basename(f)))
         except OSError:
@@ -490,10 +410,8 @@ def optimize_zone(
             # guarantee is a local-fs optimization (on an object store
             # this whole carry-over is the table format's metadata commit)
             shutil.copy2(f, os.path.join(nxt, os.path.basename(f)))
-    bytes_rewritten = 0
     for b, fs in sorted(real_bins.items()):
         paths = [p for p, _ in fs]
-        bytes_rewritten += sum(s for _, s in fs)
         tmp = os.path.join(nxt, f"_bin{b:05d}.tmp")
         spark.read.parquet(*paths).coalesce(1).write.mode("overwrite").parquet(tmp)
         part = [f for f in os.listdir(tmp) if f.endswith(".parquet")]
@@ -504,13 +422,13 @@ def optimize_zone(
         )
         shutil.rmtree(tmp)
     commit_swap(path)
-    return OptimizeManifest(
-        files_before=len(listing),
+    return CompactionReport(
+        files_before=n,
         files_after=len(_list_files(path)),
-        files_kept=len(kept) + len(skipped),
+        files_kept=len(kept),
         files_rewritten=sum(len(fs) for fs in real_bins.values()),
         bins=len(real_bins),
-        bytes_rewritten=bytes_rewritten,
+        bytes_rewritten=sum(s for fs in real_bins.values() for _, s in fs),
     )
 
 

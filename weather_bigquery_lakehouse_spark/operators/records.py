@@ -37,38 +37,13 @@ with DuckDB's ``levenshtein`` and integer division.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import connected_components
 
 DEFAULT_MAX_BLOCK_SIZE = 10_000
 SIM_SCALE = 1_000_000
-
-
-def edit_sim_ppm(a: Column, b: Column) -> Column:
-    """Levenshtein similarity of two strings in exact integer ppm:
-    ``(maxlen − lev)·1e6 div maxlen`` (1e6 when both empty, 0 when either
-    side is NULL). The floor division is the modulo identity
-    ``(x − x % m) / m`` in pure Column algebra: x ≤ maxlen·1e6 and the
-    quotient ≤ 1e6 are both far inside double's 2⁵³ exact-integer range,
-    the numerator is exactly divisible by construction, and the result
-    floors identically to DuckDB's ``//`` on non-negatives — so field
-    scores are engine-portable.
-
-    Hot-path note: this convenience form references the levenshtein
-    subtree twice (``x`` is reused, and Project collapse inlines it);
-    :func:`record_match_scores` stages ``__y``/``__max`` as columns and
-    uses the single-reference ``div`` form instead."""
-    la = F.length(a).cast("bigint")
-    lb = F.length(b).cast("bigint")
-    maxlen = F.greatest(la, lb)
-    x = (maxlen - F.levenshtein(a, b).cast("bigint")) * F.lit(SIM_SCALE)
-    return (
-        F.when(a.isNull() | b.isNull(), F.lit(0).cast("bigint"))
-        .when(a == b, F.lit(SIM_SCALE).cast("bigint"))
-        .otherwise(((x - x % maxlen) / maxlen).cast("bigint"))
-    )
 
 
 def _blocked_self_join(

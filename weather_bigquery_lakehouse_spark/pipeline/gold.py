@@ -142,9 +142,9 @@ def load_gold(
     catalog: GoldCatalog,
     zone_dir: str,
     modeling_date: str,
-) -> dict[str, DataFrame]:
+) -> None:
     """Build all five gold tables from the silver zone and load them
-    through the catalog; returns them read back from the catalog.
+    through the catalog.
 
     Dim loads are truncate (type-1 refresh); the fact load is an
     idempotent append (left-anti on id_fact)."""
@@ -170,4 +170,3 @@ def load_gold(
     dim_city = catalog.read_table(spark, "dim_city")
     fact = build_fact_weather(today, dim_city, modeling_date)
     idempotent_fact_append(spark, catalog, fact, "fact_weather", [modeling_date])
-    return {name: catalog.read_table(spark, name) for name in [*dims, "fact_weather"]}

@@ -118,8 +118,8 @@ def _silver_transform(spark, zone_dir, run_date, **_) -> None:
     silver.silver_cptec_cities(spark, zone_dir, run_date)
 
 
-def _gold_load(spark, zone_dir, warehouse_dir, run_date, **_) -> dict:
-    return gold.load_gold(spark, GoldCatalog(warehouse_dir), zone_dir, run_date)
+def _gold_load(spark, zone_dir, warehouse_dir, run_date, **_) -> None:
+    gold.load_gold(spark, GoldCatalog(warehouse_dir), zone_dir, run_date)
 
 
 def _zone_maintenance(spark, zone_dir, keep_dates, **_) -> dict:
@@ -152,7 +152,7 @@ def execute_stage(
     """Execute ONE pipeline task — the entrypoint an external scheduler
     (e.g. the Airflow DAG emitted by ``pipeline.airflow_emit``) binds each
     task to, and the one :func:`run_pipeline` loops over. Returns the
-    stage's result (gold: its five tables; maintenance: its reports)."""
+    stage's result (maintenance: its reports; the other stages: None)."""
     if task_id not in STAGES:
         raise ValueError(f"unknown task_id {task_id!r}; known: {sorted(STAGES)}")
     return STAGES[task_id](
@@ -180,6 +180,8 @@ def run_pipeline(
     come from the injected sources (HTTP in production, fixtures in
     tests). Weekly-cadence tasks (maintenance) are skipped here —
     schedulers run them via :func:`run_maintenance` at their own cadence.
+    Returns the gold ``catalog`` (None when the dag has no gold task) and
+    the ``executed`` task ids.
     """
     run_date = run_date or dt.date.today().isoformat()
     # Fail fast instead of mid-run: every daily task needs a daily stage,
@@ -201,17 +203,13 @@ def run_pipeline(
                 f"dag {dag.dag_id}: {task_id} requires {sorted(missing)} — "
                 "it reads their outputs from the zones"
             )
-    results = {
-        task_id: execute_stage(
+    for task_id in daily:
+        execute_stage(
             spark, task_id, zone_dir, warehouse_dir, run_date,
             city_records, forecast_records,
         )
-        for task_id in daily
-    }
-    tables = results.get("gold_load")
     return {
-        "catalog": GoldCatalog(warehouse_dir) if tables is not None else None,
-        "tables": tables,
+        "catalog": GoldCatalog(warehouse_dir) if "gold_load" in daily else None,
         "executed": daily,
     }
 
@@ -220,7 +218,6 @@ def run_maintenance(
     spark: SparkSession,
     zone_dir: str,
     keep_dates: list[str] | None = None,
-    target_file_bytes: int = 128 * 1024 * 1024,
 ) -> dict:
     """Nightly zone maintenance after the daily run: compact each zone's
     small files and, when a retention window is given, expire
@@ -266,7 +263,5 @@ def run_maintenance(
             f.endswith(".parquet") for _, _, fs in os.walk(zpath) for f in fs
         )
         if has_parquet:
-            reports[f"{name}:compaction"] = compact_zone(
-                spark, zpath, target_file_bytes=target_file_bytes
-            )
+            reports[f"{name}:compaction"] = compact_zone(spark, zpath)
     return reports

@@ -111,7 +111,8 @@ class QualityObserver:
             "n_duplicate_rows": mid_rows - rows_out,
         }
         order = list(row.keys())
-        report = spark.createDataFrame([row]).select(*order)
+        # one partition: the 1-row frame otherwise also writes an empty file
+        report = spark.createDataFrame([row]).select(*order).coalesce(1)
         write_table(
             report,
             os.path.join(zone_dir, "silver", "_quality", entity),

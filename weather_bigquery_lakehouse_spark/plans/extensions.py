@@ -3014,8 +3014,8 @@ def probe_media_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _COMPACT_N_FILES = 32   # synthetic files per source partition
-_COMPACT_MIN = 400      # compliance floor (chars stand in for bytes)
-_COMPACT_TARGET = 800   # bin target; >= 2*min (the idempotence contract)
+_COMPACT_TARGET = 800   # bin target (chars stand in for bytes)
+_COMPACT_MIN = _COMPACT_TARGET // 2  # the planner's compliance floor
 
 _SQL_COMPACTION_PLAN = f"""
 WITH b AS (
@@ -3052,8 +3052,8 @@ FROM small
     "rows): compliant files keep (never re-encoded — rewriting "
     "right-sized files is write amplification), under-sized files "
     "bin-pack per partition by running-total window (bin = cum_before "
-    "div target); target >= 2*min makes every non-final bin compliant, "
-    "which is the structural idempotence guarantee optimize_zone's "
+    "div target); a compliance floor of target/2 makes every non-final "
+    "bin compliant, the structural idempotence guarantee compact_zone's "
     "second run relies on (pytest-pinned on real files: hardlinked "
     "inodes untouched, run 2 a no-op); the synthetic inventory derives "
     "deterministically from documents via the md5-bucket machinery so "
@@ -3078,12 +3078,7 @@ def compaction_plan_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
             "size_bytes",
         )
     )
-    return compaction_bins(
-        files,
-        target_bytes=_COMPACT_TARGET,
-        min_file_bytes=_COMPACT_MIN,
-        partition_cols=["source"],
-    )
+    return compaction_bins(files, target_bytes=_COMPACT_TARGET, partition_cols=["source"])
 
 
 # --------------------------------------------------------------------------

@@ -281,7 +281,7 @@ def fact_rerun_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     root = os.path.join(_gold_workdir(sf_dir), "fact_rerun")
-    catalog = GoldCatalog(root, spark=spark)
+    catalog = GoldCatalog(root)
     # land the SAME increment twice — the rerun must be a complete no-op
     # (repeat registry sweeps in one process re-land again: still a no-op,
     # which is itself the contract under test)

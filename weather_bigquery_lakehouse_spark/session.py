@@ -117,8 +117,3 @@ def driver_jvm_args(spark: SparkSession) -> list[str]:
     args = runtime.getRuntimeMXBean().getInputArguments()
     return [str(a) for a in args if str(a).startswith("-X")]
 
-
-def get_session() -> SparkSession:
-    """Return the active session, building a default one if none exists."""
-    active = SparkSession.getActiveSession()
-    return active if active is not None else build_session()

@@ -1,1 +1,1 @@
-"""Structured Streaming: incremental ingest + windowed aggregation."""
+"""Structured Streaming: windowed aggregation, dedup, joins and incremental MERGE."""

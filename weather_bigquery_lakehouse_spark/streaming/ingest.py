@@ -796,37 +796,6 @@ def run_chunk_index_stream(
     return spark.read.schema(index_schema).parquet(index_dir)
 
 
-def incremental_zone_ingest(
-    spark: SparkSession,
-    source_dir: str,
-    target_dir: str,
-    checkpoint_dir: str,
-    fmt: str = "parquet",
-    schema=None,
-    transform=None,
-) -> None:
-    """Incremental bronze→silver promotion: stream the source zone with
-    AvailableNow, apply ``transform``, append to the target zone. Re-runs
-    only process files added since the last checkpoint — the engine's
-    idempotent replacement for the reference's re-read-everything daily job
-    (reference bronze_to_silver.py reads the full day's objects each run)."""
-    reader = spark.readStream
-    if schema is not None:
-        reader = reader.schema(schema)
-    stream = reader.format(fmt).option("header", True).load(source_dir)
-    if transform is not None:
-        stream = transform(stream)
-    (
-        stream.writeStream.format("parquet")
-        .option("path", target_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
 def run_incremental_gold_stream(
     spark: SparkSession,
     events_dir: str,
