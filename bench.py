@@ -57,6 +57,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from weather_bigquery_lakehouse_spark import driver_cds
 from weather_bigquery_lakehouse_spark.session import build_session, driver_jvm_args
 from weather_bigquery_lakehouse_spark.operators import artifacts
 from weather_bigquery_lakehouse_spark.operators import dedup as _dd
@@ -461,6 +462,9 @@ def main() -> None:
         # records before r15 ran with the JDK's default JIT tiering; the
         # driver JVM's -X/-XX options tell them apart from later ones
         "jvm_args": driver_jvm_args(spark),
+        # whether the driver JVM mapped a class-data-sharing archive
+        # (records without the key ran without one)
+        "cds": driver_cds.state(spark),
     }
     if load_avg[0] > LOAD_WARN:
         summary["load_warning"] = (

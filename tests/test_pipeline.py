@@ -505,6 +505,48 @@ def test_maintenance_compacts_and_expires(spark, tmp_path):
     assert spark.read.parquet(os.path.join(silver, entity)).count() > 0
 
 
+def _two_day_zone(root) -> str:
+    """A zone root holding one silver entity with two small parquet files
+    in each of two ``_ingestion_date`` partitions."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for date in ("2024-03-25", "2024-03-26"):
+        part = root / "silver" / "x" / f"_ingestion_date={date}"
+        part.mkdir(parents=True)
+        for i in range(2):
+            pq.write_table(pa.table({"v": [i]}), str(part / f"part-{i}.parquet"))
+    return str(root)
+
+
+@pytest.mark.parametrize("as_uri", ["file://{}", "file:{}"])
+def test_maintenance_file_uri_zone_matches_plain_path(spark, tmp_path, as_uri):
+    """A ``file:`` zone resolves to its local path, so maintenance reports
+    what the plain path reports (it used to return ``{}``)."""
+    from weather_bigquery_lakehouse_spark.pipeline.runner import run_maintenance
+
+    plain = run_maintenance(spark, _two_day_zone(tmp_path / "a"), keep_dates=["2024-03-26"])
+    uri = run_maintenance(
+        spark, as_uri.format(_two_day_zone(tmp_path / "b")), keep_dates=["2024-03-26"]
+    )
+    assert plain["silver/x:expired"] == ["2024-03-25"]
+    assert plain["silver/x:compaction"].files_rewritten == 2
+    assert uri == plain
+    assert [p.name for p in (tmp_path / "b" / "silver" / "x").iterdir()] == [
+        "_ingestion_date=2024-03-26"
+    ]
+
+
+@pytest.mark.parametrize("zone", ["s3a://bucket/zones", "gs://bucket/zones"])
+def test_maintenance_object_store_zone_raises(spark, zone):
+    """Zones are walked with ``os`` calls: an object-store URI raises,
+    naming the URI, instead of finding nothing."""
+    from weather_bigquery_lakehouse_spark.pipeline.runner import run_maintenance
+
+    with pytest.raises(ValueError, match=re.escape(zone)):
+        run_maintenance(spark, zone, keep_dates=[])
+
+
 # --------------------------------------------------------------------------
 # DAG spec: the runner's ordering is data, not code
 # --------------------------------------------------------------------------

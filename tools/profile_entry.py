@@ -8,9 +8,10 @@ paying the full 98-entry sweep. Entries run in the order given, under
 bench's owner rule: the first entry that builds a shared trained artifact
 times its cold build on every rep, later ones read it warm. Prints one
 JSON line: {"probe": [start, end], "entries": {name: {"runs": [...],
-"median_tail": ..., "min": ...}}, "jvm_args": [...]}. median_tail is the
-r13 convention (median of runs 2..N); jvm_args are the driver JVM's
--X/-XX options. Bad arguments exit with a usage message before the JVM
+"median_tail": ..., "min": ...}}, "jvm_args": [...], "cds": ...}.
+median_tail is the r13 convention (median of runs 2..N); jvm_args are the
+driver JVM's -X/-XX options and cds its class-data-sharing archive state
+(``driver_cds.state``). Bad arguments exit with a usage message before the JVM
 starts.
 """
 
@@ -24,6 +25,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench
+from weather_bigquery_lakehouse_spark import driver_cds
 from weather_bigquery_lakehouse_spark.session import build_session, driver_jvm_args
 from weather_bigquery_lakehouse_spark.plans import ALL_QUERIES
 
@@ -56,7 +58,7 @@ def main(argv: list[str]) -> None:
         }
     p1 = bench.cpu_probe()
     print(json.dumps({"probe": [p0, p1], "entries": out,
-                      "jvm_args": driver_jvm_args(spark)}))
+                      "jvm_args": driver_jvm_args(spark), "cds": driver_cds.state(spark)}))
     spark.stop()
 
 

@@ -12,10 +12,23 @@ standard nightly fixes.
 from __future__ import annotations
 
 import os
+import re
 import shutil
 from dataclasses import astuple, dataclass
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import SparkSession
+
+
+def local_zone_path(zone: str) -> str:
+    """The local path of a zone. Maintenance walks and commits zones with
+    ``os`` calls, so a ``file:`` URI resolves to its path and any other
+    scheme (``s3a://``, ``gs://``) raises instead of finding nothing."""
+    if zone.startswith("file:"):
+        return unquote(urlparse(zone).path)
+    if re.match(r"[A-Za-z][A-Za-z0-9+.-]*://", zone):
+        raise ValueError(f"zone maintenance needs a local path or file: URI, got {zone!r}")
+    return zone
 
 
 def recover_swap(path: str) -> str:
@@ -364,7 +377,10 @@ def compact_zone(
     names, not the files, so a whole-zone rewrite would flatten the
     layout, and one partition is the blast radius a scheduler running
     compaction alongside live readers wants.
+
+    ``path`` is a local path or ``file:`` URI (:func:`local_zone_path`).
     """
+    path = local_zone_path(path)
     part_dirs = sorted(
         os.path.join(path, e)
         for e in (os.listdir(path) if os.path.isdir(path) else [])
@@ -442,7 +458,9 @@ def expire_partitions(
     expiring a year of a 100 TB zone is a metadata operation. The caller
     computes ``keep_values`` (e.g. the last N ingestion dates) so the
     policy stays in one place and this function stays mechanical.
+    ``path`` is a local path or ``file:`` URI (:func:`local_zone_path`).
     """
+    path = local_zone_path(path)
     dropped = []
     prefix = f"{partition_col}="
     if not os.path.isdir(path):

@@ -178,6 +178,7 @@ def execute_airflow_task(task_id: str, run_date: str | None = None) -> None:
     failures drop with accounting, they don't abort the landing)."""
     import os
 
+    from .. import driver_cds
     from ..session import build_session
     from .runner import execute_stage
 
@@ -234,4 +235,8 @@ def execute_airflow_task(task_id: str, run_date: str | None = None) -> None:
         )
     finally:
         if owned:
-            spark.stop()
+            # Airflow's forking task runner ends the task process with
+            # os._exit, which skips atexit hooks: a driver JVM that is
+            # writing its class-data-sharing archive is ended and the
+            # archive published here.
+            driver_cds.stop(spark)

@@ -229,12 +229,16 @@ def run_maintenance(
     (``zones/{tier}/{entity}``); compaction only to parquet zones
     (silver and up). Bronze lands raw JSON and is the audit trail — it
     expires, but it is never rewritten.
+
+    ``zone_dir`` is a local path or a ``file:`` URI; another scheme raises
+    ``ValueError`` (the zones are walked with ``os`` calls).
     """
     import os
 
-    from ..io.maintenance import compact_zone, expire_partitions
+    from ..io.maintenance import compact_zone, expire_partitions, local_zone_path
 
     reports: dict[str, object] = {}
+    zone_dir = local_zone_path(zone_dir)
 
     def _entity_zones(root: str):
         for tier in sorted(os.listdir(root)):

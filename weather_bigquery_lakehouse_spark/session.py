@@ -13,7 +13,10 @@ declaratively, with every knob that matters at 100 TB scale:
 - shuffle partitions sized for the test harness; on a real cluster this is
   overridden by AQE's coalescing + `spark.sql.adaptive.advisoryPartitionSizeInBytes`.
 - a driver-JVM JIT policy that keeps the C2 compiler off the planner
-  (`DRIVER_JIT_OPTIONS`, see docs/SCALE.md "Driver JIT policy").
+  (`DRIVER_JIT_OPTIONS`, see docs/SCALE.md "Driver JIT policy");
+- a class-data-sharing archive that maps Spark's classes into the driver JVM
+  instead of loading them (`driver_cds`, see docs/SCALE.md "Driver
+  class-data sharing").
 """
 
 from __future__ import annotations
@@ -21,6 +24,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from . import driver_cds
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -64,7 +69,9 @@ def build_session(
 
     The driver JVM gets ``DRIVER_JIT_OPTIONS`` as
     ``spark.driver.extraJavaOptions``; an ``extra_conf`` value for that key
-    replaces it. It only takes effect when this call starts the JVM.
+    replaces it. It only takes effect when this call starts the JVM, and so
+    does the class-data-sharing archive (``driver_cds.start``), whose state
+    the session records as ``spark.graft.driverCds``.
     """
     builder = (
         SparkSession.builder.appName(app_name)
@@ -83,7 +90,6 @@ def build_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.driver.extraJavaOptions", DRIVER_JIT_OPTIONS)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
         # The fixture tables store event timestamps as parquet
@@ -103,9 +109,11 @@ def build_session(
         }
         for key, value in s3a.items():
             builder = builder.config(mapping.get(key, key), value)
-    for key, value in (extra_conf or {}).items():
+    extra_conf = extra_conf or {}
+    for key, value in extra_conf.items():
         builder = builder.config(key, value)
-    spark = builder.getOrCreate()
+    java_options = extra_conf.get(driver_cds.JAVA_OPTIONS_KEY, DRIVER_JIT_OPTIONS)
+    spark = driver_cds.start(builder, java_options, extra_conf)
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
